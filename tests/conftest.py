@@ -15,7 +15,8 @@ SF_DIR = "/root/testdata/sf0.001"
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark("pytest", master="local[8]", shuffle_partitions=8)
+    # local[$SPARK_GRAFT_CPUS] (this host's cores when unset)
+    s = get_spark("pytest", shuffle_partitions=8)
     yield s
 
 

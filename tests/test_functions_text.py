@@ -14,7 +14,7 @@ from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from trello_github_etl_spark.functions import text
-from trello_github_etl_spark.functions.checklist import parse_check_item
+from trello_github_etl_spark.functions.checklist import with_parsed_check_item
 from trello_github_etl_spark.functions.split_title import split_title_desc_py
 
 # (input, expected capture) — tests/dash-parser-re.js:5–13
@@ -139,7 +139,9 @@ def test_parse_check_item_composite(spark):
         ("plain short task",),
     ]
     df = spark.createDataFrame(cases, ["name"])
-    rows = df.select(parse_check_item(F.col("name")).alias("p")).collect()
+    parsed = with_parsed_check_item(df, "name", "p")
+    assert parsed.columns == ["name", "p"]  # no staging column leaks
+    rows = parsed.collect()
 
     p0 = rows[0].p
     assert p0.amount == "1.5"

@@ -159,14 +159,18 @@ def test_rotation_window_front_loads_never_sampled_queries():
     """VERDICT r12 #3: this round's window must carry (a) every
     anchor — including the r12-red t19, its diagnostic, and the
     board/relational reference-parity slice — and (b) >= 20
-    previously-never-driver-sampled queries."""
+    previously-never-driver-sampled queries, or all of them once fewer
+    than 20 remain unsampled."""
     from trello_github_etl_spark import registry
 
     prio = registry.DRIVER_SAMPLE_PRIORITY
     for a in registry.DRIVER_SAMPLE_ANCHORS:
         assert a in prio, f"anchor {a} missing from window"
+    never = [n for n in registry.QUERIES if n not in registry.DRIVER_SAMPLED_HISTORY]
     fresh = [n for n in prio if n not in registry.DRIVER_SAMPLED_HISTORY]
-    assert len(fresh) >= 20, f"only {len(fresh)} never-sampled in window"
+    assert len(fresh) >= min(20, len(never)), (
+        f"only {len(fresh)} of {len(never)} never-sampled in window"
+    )
     # history is real: every name in it is (still) a registered query
     ghost = registry.DRIVER_SAMPLED_HISTORY - set(registry.QUERIES)
     assert not ghost, f"history names no longer registered: {sorted(ghost)}"

@@ -615,3 +615,27 @@ def test_t23_tvd_no_token_self_join_single_scan(spark):
     assert "Window" not in plan
     assert plan.count("BroadcastNestedLoopJoin") <= 1
     assert "InMemoryTableScan" in plan
+
+
+def test_board_customize_has_no_cross_join_and_parses_bounty_once(spark):
+    """The board dimensions reach the rows as scalar subqueries, not
+    broadcast cross joins, and the staged check-item parser puts each
+    bounty-regex use in the plan once."""
+    from trello_github_etl_spark.functions import text
+    from trello_github_etl_spark.operators.board_pipeline import (
+        customize_cards,
+        customize_check_items,
+    )
+    from trello_github_etl_spark.queries import board_q
+
+    entities = board_q._board_entities(spark)
+    cards = customize_cards(entities, board_q.STATUS_MAP, board_q.SECADM)
+    items = customize_check_items(entities, cards.select("id"))
+    for df in (cards, items):
+        plan = _plan(df)
+        assert "BroadcastNestedLoopJoin" not in plan
+        assert "CartesianProduct" not in plan
+    plan = _plan(items)
+    # the amount's regexp_extract (group 1) and the first-match split
+    assert plan.count(f"{text.BOUNTY_RE}, 1)") == 1
+    assert plan.count(text.BOUNTY_RE) == 2

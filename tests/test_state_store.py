@@ -41,6 +41,21 @@ def test_merge_replaces_matches_keeps_rest(spark, store):
     assert got2 == got
 
 
+def test_history_counts_the_rows_written(spark, store):
+    """n_rows is counted in the write itself, for any partitioning and
+    for empty frames; a merge records the merged table's size."""
+    empty = _df(spark, [("a", "t1")]).limit(0)
+    store.commit(empty)
+    rows = [(f"k{i}", "t1") for i in range(5)]
+    store.commit(_df(spark, rows).repartition(3))
+    store.commit(_df(spark, rows).filter("title = 'none'"))
+    store.merge(_df(spark, rows[:2]))
+    store.merge(_df(spark, [("z", "t1")]))
+    store.merge(empty)
+    assert [c.n_rows for c in store.history()] == [0, 5, 0, 2, 3, 3]
+    assert store.read(spark).count() == 3
+
+
 def test_orphan_directory_is_invisible(spark, store):
     store.commit(_df(spark, [("a", "t1")]))
     # simulate a writer that crashed after writing data but BEFORE

@@ -53,8 +53,7 @@ def replace_first(col: Column, pattern: str) -> Column:
 
 def extract_bounty_amount(name: Column) -> Column:
     """F1 capture: ``'Some task (1 DASH)' → '1'``; null when absent/empty."""
-    amt = F.regexp_extract(name, BOUNTY_RE, 1)
-    return F.when(amt == "", F.lit(None).cast("string")).otherwise(amt)
+    return F.nullif(F.regexp_extract(name, BOUNTY_RE, 1), F.lit(""))
 
 
 def strip_bounty(name: Column) -> Column:

@@ -3,9 +3,11 @@ lib/transform.js:257–305) and the quickview report
 (utils/board-quickview.js) as DataFrame transforms.
 
 Design: the board-local dimensions (lists, members, custom fields) are
-config-sized, so they ride along as broadcast map columns built with
-``map_from_entries`` — the Spark analog of the reference's in-memory
-lookup tables, with no per-row linear scans and no shuffles. Array
+config-sized, so each one collapses into a map-valued scalar subquery
+built with ``map_from_entries`` — the Spark analog of the reference's
+in-memory lookup tables: it runs once per query, lands in the row plan
+as a value, with no join, no per-row linear scan and no shuffle, and a
+map whose column is pruned leaves the plan entirely. Array
 order is semantic everywhere (idMembers order drives owner
 resolution; customFieldItems order drives the report), so lookups use
 ``transform`` over the arrays rather than explode+join.
@@ -13,11 +15,11 @@ resolution; customFieldItems order drives the report), so lookups use
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from trello_github_etl_spark.functions import text
-from trello_github_etl_spark.functions.checklist import parse_check_item
+from trello_github_etl_spark.functions.checklist import with_parsed_check_item
 from trello_github_etl_spark.operators.owners import (
     resolve_owners,
     with_owner_sentinels,
@@ -27,13 +29,14 @@ LABEL_SENTINEL = "!Label"
 ASSIGNEE_SENTINEL = "!Assigned"
 
 
-def _map_col(dim: DataFrame, key: str, value: str, alias: str) -> DataFrame:
-    """Collapse a small dimension into one broadcastable map column."""
+def _map_col(dim: DataFrame, key: str, value: str) -> Column:
+    """Collapse a small dimension into one map-valued scalar subquery.
+
+    Spark rejects subqueries inside higher-order function lambdas, so a
+    lambda reads the map through a column attached with ``withColumn``."""
     return dim.agg(
-        F.map_from_entries(
-            F.collect_list(F.struct(F.col(key), F.col(value)))
-        ).alias(alias)
-    )
+        F.map_from_entries(F.collect_list(F.struct(F.col(key), F.col(value))))
+    ).scalar()
 
 
 def _status_map_col(status_map: dict[str, str]):
@@ -53,17 +56,19 @@ def customize_cards(
     custom_field_names, label_names (sorted, ``!Label`` default),
     owner, fallback_owner (sentineled).
     """
-    cards = entities["cards"]
-    lists_map = _map_col(entities["lists"], "id", "name", "_lists")
-    cf_map = _map_col(entities["custom_fields"], "id", "name", "_cfs")
-    members_map = _map_col(entities["members"], "id", "username", "_members")
-
     enriched = (
-        cards.filter(~F.coalesce(F.col("closed"), F.lit(False)))
-        .crossJoin(F.broadcast(lists_map))
-        .crossJoin(F.broadcast(cf_map))
-        .crossJoin(F.broadcast(members_map))
-        .withColumn("card_type", F.try_element_at(F.col("_lists"), F.col("idList")))
+        entities["cards"]
+        .filter(~F.coalesce(F.col("closed"), F.lit(False)))
+        .withColumns(
+            {
+                "_cfs": _map_col(entities["custom_fields"], "id", "name"),
+                "_members": _map_col(entities["members"], "id", "username"),
+            }
+        )
+        .withColumn(
+            "card_type",
+            F.try_element_at(_map_col(entities["lists"], "id", "name"), F.col("idList")),
+        )
         .withColumn(
             "card_status", F.try_element_at(_status_map_col(status_map), F.col("card_type"))
         )
@@ -111,7 +116,7 @@ def customize_cards(
     )
 
     resolved = resolve_owners(enriched, entities["members"])
-    return with_owner_sentinels(resolved).drop("_lists", "_cfs", "_members")
+    return with_owner_sentinels(resolved).drop("_cfs", "_members")
 
 
 def customize_check_items(
@@ -130,16 +135,15 @@ def customize_check_items(
             items.card_id == F.col("_acid"),
             "left_semi",
         )
-    members_map = _map_col(entities["members"], "id", "username", "_members")
     parsed = (
-        items.filter(F.col("state") != "complete")
-        .crossJoin(F.broadcast(members_map))
-        .withColumn("_p", parse_check_item(F.col("name")))
+        with_parsed_check_item(items.filter(F.col("state") != "complete"), "name", "_p")
         .withColumn("task_type", text.task_type(F.col("checklist_name")))
         .withColumn(
             "assignee",
             F.when(F.col("idMember").isNull(), F.lit(ASSIGNEE_SENTINEL)).otherwise(
-                F.try_element_at(F.col("_members"), F.col("idMember"))
+                F.try_element_at(
+                    _map_col(entities["members"], "id", "username"), F.col("idMember")
+                )
             ),
         )
     )

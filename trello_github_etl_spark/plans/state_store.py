@@ -62,7 +62,8 @@ import os
 import time
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import functions as F
 
 from trello_github_etl_spark.plans.upserts import merge_state
 
@@ -161,8 +162,13 @@ class VersionedStateStore:
                 f"version directory v{version:08d} already claimed by "
                 "another writer"
             )
+        # counted directly under the write, in its result stage, where
+        # each partition's count is taken exactly once
+        written = Observation()
         try:
-            df.write.mode("errorifexists").parquet(path)
+            df.observe(written, F.count(F.lit(1)).alias("n")).write.mode(
+                "errorifexists"
+            ).parquet(path)
         except Exception as e:
             # Distinguish "a competitor took this version" from "OUR
             # write failed". Deleting a competitor's directory would
@@ -189,7 +195,7 @@ class VersionedStateStore:
 
             shutil.rmtree(path, ignore_errors=True)
             raise
-        n = df.sparkSession.read.parquet(path).count()
+        n = written.get["n"]
         # CAS re-check at the publish point: a competing writer may
         # have published while this one was writing parquet.
         m2 = self._read_manifest()

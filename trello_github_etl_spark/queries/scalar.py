@@ -423,7 +423,7 @@ def f15_variant_props(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def f_parse_check_item_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     """End-to-end parseChecklistItem on constructed document names."""
-    from trello_github_etl_spark.functions.checklist import parse_check_item
+    from trello_github_etl_spark.functions.checklist import with_parsed_check_item
 
     # parallelism-guarded: the parse pipeline is regex-heavy narrow
     # compute on the scan (same starved-scan exposure as f3)
@@ -438,7 +438,7 @@ def f_parse_check_item_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         .when(F.col("doc_id") % 3 == 1, F.concat("text", F.lit(" ( .5 DASH )  ")))
         .otherwise(F.col("text"))
     )
-    parsed = docs.select("doc_id", parse_check_item(raw).alias("p"))
+    parsed = with_parsed_check_item(docs.select("doc_id", raw.alias("name")), "name", "p")
     return parsed.select(
         "doc_id",
         F.col("p.amount").alias("amount"),

@@ -63,7 +63,7 @@ ORACLES: dict[str, str] = {}
 # driver sample (the keys of CORRECTNESS_r{N}.json) into
 # DRIVER_SAMPLED_HISTORY below.
 
-# Every name that has appeared in any driver CORRECTNESS_r01..r14
+# Every name that has appeared in any driver CORRECTNESS_r01..r15
 # artifact (union of their keys; regenerate with
 # `python -c "import json,glob; print(sorted(set().union(*[set(json.load(open(f))) for f in glob.glob('CORRECTNESS_r[0-9]*.json')])))"`).
 DRIVER_SAMPLED_HISTORY: frozenset[str] = frozenset({
@@ -140,6 +140,21 @@ DRIVER_SAMPLED_HISTORY: frozenset[str] = frozenset({
     "t4_fingerprints", "t5_tfidf_top_terms", "t6_subword_tokens",
     "t7_pii_redaction", "t8_repetition_stats", "t8a_top_word_adaptive",
     "t9_collapse_repeats", "zo1_zorder_key",
+    "a10_unpivot_metrics", "a11_latest_order_argmax",
+    "fz1_levenshtein_pairs", "hist1_price_histogram",
+    "hof1_quantity_array_ops", "prof2_moments", "prof3_mad_outliers",
+    "sql10_scalar_subquery_vs_avg", "sql4_customer_order_exists",
+    "sql7_grouping_sets_flags", "sql8_filtered_aggregates",
+    "sql9_in_subquery_semi", "tpch11_important_parts",
+    "tpch12_priority_lines", "tpch13_customer_distribution",
+    "tpch14_promo_effect", "tpch15_top_supplier",
+    "tpch16_supplier_count", "tpch17_small_qty_revenue",
+    "tpch18_large_orders", "tpch19_disjunctive_revenue",
+    "tpch20_excess_suppliers", "tpch21_waiting_supplier",
+    "tpch22_idle_customers", "tpch2_min_cost_supplier",
+    "tpch4_order_priority", "tpch6_revenue_change",
+    "tpch7_nation_volume", "tpch8_market_share", "tpch9_product_profit",
+    "w8_forward_fill",
 })
 
 # Fixed canaries, present in EVERY round's window: the r12 driver-red

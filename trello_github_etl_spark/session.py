@@ -13,8 +13,10 @@ import os
 
 from pyspark.sql import SparkSession
 
-# One knob per env var so the driver/bench can resize without code edits.
-DEFAULT_CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
+# One knob per env var so the driver/bench can resize without code edits;
+# unset, use this host's cores (more local threads than cores only
+# oversubscribes them).
+DEFAULT_CPUS = os.environ.get("SPARK_GRAFT_CPUS") or str(os.cpu_count())
 
 
 def get_spark(
