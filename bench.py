@@ -186,7 +186,6 @@ HEADLINE = [
     # bp2 kept anyway as the one board-fixture query with real cost).
     "dd16_pagerank_dup_graph",
     "dd22_dup_cluster_keepers",
-    "dd9_dup_clusters_twostar",
     "dd6_dup_clusters",
     "s10_ivf_trained_topk",
     "bp2_card_issue_bodies",
@@ -221,7 +220,13 @@ def _clear_python_side_caches() -> None:
 
 
 def _time_once(spark, name: str) -> float:
+    # Every timed run starts cold on both sides (VERDICT r15 #1): with
+    # the JVM cache cleared only between queries, runs 2..n of dd14,
+    # dd15 and samp7 read blocks that run 1 persisted. Clearing here
+    # also bounds executor storage across an ALL-mode sweep, since
+    # the SQL CacheManager never GC-reclaims persisted subtrees.
     _clear_python_side_caches()
+    spark.catalog.clearCache()
     t0 = time.time()
     registry.QUERIES[name](spark, SF_DIR).write.format("noop").mode(
         "overwrite"
@@ -230,8 +235,9 @@ def _time_once(spark, name: str) -> float:
 
 
 def _ref_cohort_sample(spark, samples: dict[str, list[float]]) -> None:
-    """One timed run of each cohort query, cache-cleared first so a
-    sibling query's persisted subtree can't subsidize the reading.
+    """One timed run of each cohort query (cache-cleared first by
+    _time_once, so a sibling query's persisted subtree can't subsidize
+    the reading).
     Partial corpora (docs/embeddings-only sfN dirs) skip missing
     tables silently — ref_secs then sums whatever cohort survives,
     which is still internally consistent across rounds at the same
@@ -239,7 +245,6 @@ def _ref_cohort_sample(spark, samples: dict[str, list[float]]) -> None:
     for name in REF_COHORT:
         if name not in registry.QUERIES:
             continue
-        spark.catalog.clearCache()
         try:
             samples.setdefault(name, []).append(_time_once(spark, name))
         except Exception:  # noqa: BLE001 — normalizer must never kill the bench
@@ -423,14 +428,6 @@ def main() -> None:
             errors[name] = f"{type(exc).__name__}: {exc}"[:300]
             print(f"# {name}: FAILED {errors[name]}", file=sys.stderr)
             continue
-        finally:
-            # persist()-pinned subtrees (dd27/t19/dd28 ...) register in
-            # the SQL CacheManager, which never GC-reclaims — an
-            # ALL-mode sweep over ~200 distinct plans would grow
-            # executor storage unboundedly (r9 advice). Clearing BETWEEN
-            # queries (not between a query's n runs) keeps each query's
-            # own cache semantics identical to prior rounds' numbers.
-            spark.catalog.clearCache()
         timings[name] = round(statistics.median(runs), 3)
         all_runs[name] = runs
         # [min, max, n]: n records the ACTUAL sample count (sub-second
@@ -471,8 +468,6 @@ def main() -> None:
                 fresh = [_time_once(spark, name) for _ in range(n_runs)]
             except Exception:  # noqa: BLE001 — retime must never kill the bench
                 continue
-            finally:
-                spark.catalog.clearCache()
             pooled = all_runs[name] + fresh
             pre_retime[name] = timings[name]
             timings[name] = round(statistics.median(pooled), 3)

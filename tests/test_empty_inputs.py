@@ -36,10 +36,10 @@ REPRESENTATIVE = [
     "prof1_orders_stats", "tpch18_large_orders", "tpch21_waiting_supplier",
     "sql1_region_revenue", "t8_repetition_stats", "t9_collapse_repeats",
     "sql5_recursive_month_spine", "sql6_lateral_topk_per_customer",
-    # round-2 operator families: two-star components, incremental
-    # dedup, triangles, adaptive ratio, chi-square grid, JL
-    # projection, packing (window + applyInPandas), corpus shuffle
-    "dd9_dup_clusters_twostar", "dd10_incremental_dedup",
+    # round-2 operator families: two-star components (dd6),
+    # incremental dedup, triangles, adaptive ratio, chi-square grid,
+    # JL projection, packing (window + applyInPandas), corpus shuffle
+    "dd6_dup_clusters", "dd10_incremental_dedup",
     "dd11_triangle_counts", "t8a_top_word_adaptive",
     "t10_source_lang_chisq", "s11_random_projection",
     "pipe4_concat_packing", "pipe5_greedy_pack", "pipe6_corpus_shuffle",

@@ -1,6 +1,6 @@
 """The label-propagation oracle's fixpoint guard (round 8).
 
-dd6/dd9/dd22's DuckDB oracle replays bounded-round min-label
+dd6/dd22's DuckDB oracle replays bounded-round min-label
 propagation (queries/llm_q._CLUSTERS_CTES) and keeps rows only when
 round R equals round R-1. These tests pin the guard's SEMANTICS on
 the pattern itself, DuckDB-only (no Spark): an under-provisioned

@@ -176,38 +176,6 @@ def test_rotation_window_front_loads_never_sampled_queries():
     assert not ghost, f"history names no longer registered: {sorted(ghost)}"
 
 
-def test_driver_sampled_history_is_not_stale():
-    """ADVICE r13: the MAINTENANCE RULE (fold each round's
-    CORRECTNESS_r{N}.json keys into DRIVER_SAMPLED_HISTORY) is manual;
-    if an update is forgotten, rotation recomputes the identical
-    window and coverage silently stalls. Regenerate the union of all
-    committed driver artifacts and assert it equals the history, so a
-    missed fold fails loudly here."""
-    import glob
-    import json
-    from pathlib import Path
-
-    from trello_github_etl_spark import registry
-
-    root = Path(__file__).resolve().parents[1]
-    files = sorted(glob.glob(str(root / "CORRECTNESS_r[0-9]*.json")))
-    if not files:  # fresh clone without driver artifacts: nothing to check
-        return
-    union: set[str] = set()
-    for f in files:
-        union |= set(json.load(open(f)))
-    missing = union - registry.DRIVER_SAMPLED_HISTORY
-    assert not missing, (
-        f"DRIVER_SAMPLED_HISTORY is stale — fold these driver-sampled keys "
-        f"in (registry.py MAINTENANCE RULE): {sorted(missing)}"
-    )
-    extra = registry.DRIVER_SAMPLED_HISTORY - union
-    assert not extra, (
-        f"DRIVER_SAMPLED_HISTORY names never present in any "
-        f"CORRECTNESS_r*.json artifact: {sorted(extra)}"
-    )
-
-
 def test_prioritize_is_idempotent():
     """The rotation plan must be stable under repeated load_all()
     calls (the reorder must not feed back into plan selection)."""

@@ -59,7 +59,7 @@ def main() -> None:
 
     docs = _augmented_docs(spark, args.sf)
 
-    # Phase A: star-edge generation (dd6/dd9/dd22's shared edge half)
+    # Phase A: star-edge generation (dd6/dd22's shared edge half)
     timed("edge_gen_star", args.runs,
           lambda: noop(dedup.lsh_candidate_edges(_augmented_docs(spark, args.sf))))
     buf = io.StringIO()
@@ -80,8 +80,6 @@ def main() -> None:
     print(f"edges materialized: {n_edges}", flush=True)
     timed("cc_plain_on_edges", args.runs,
           lambda: noop(dedup.connected_components(edges)))
-    timed("cc_jump_on_edges", args.runs,
-          lambda: noop(dedup.connected_components_jump(edges)))
     timed("cc_twostar_on_edges", args.runs,
           lambda: noop(dedup.connected_components_twostar(edges)))
 
@@ -92,11 +90,11 @@ def main() -> None:
     timed("pagerank_on_pairs", args.runs,
           lambda: noop(dedup.pagerank(pairs)))
 
-    # Label parity spot check (jump vs plain) on the real edge set
+    # Label parity spot check (two-star vs plain) on the real edge set
     a = dedup.connected_components(edges)
-    b = dedup.connected_components_jump(edges)
+    b = dedup.connected_components_twostar(edges)
     diff = a.exceptAll(b).count() + b.exceptAll(a).count()
-    print(f"jump-vs-plain label diff rows: {diff}", flush=True)
+    print(f"twostar-vs-plain label diff rows: {diff}", flush=True)
 
 
 if __name__ == "__main__":

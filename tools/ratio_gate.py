@@ -281,7 +281,7 @@ ALLOWED_REGRESS = {
         "r15 bench-honesty step change (cold-seed runs; lesson 55) "
         "PLUS same-day drift (r14 code 3.351 on the r15 close "
         "machine vs own-pool min 2.504); the r15 seed-phase change "
-        "itself A/B-measured wash-to-positive (seed2l_probe). "
+        "itself A/B-measured wash-to-positive (OPTIMIZATION_r15.md). "
         "Re-adjudicate if sf0.1 crosses 7 s",
     ),
 }

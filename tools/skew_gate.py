@@ -16,7 +16,7 @@ third standing scale next to sf0.01 and sf0.1:
 
 Every giant-family lever the repo advertises is thereby re-receipted
 per round on data where it ENGAGES: dd27's band-df cap drops the
-1,000-member family's bands, dd25/dd6/dd9/dd22 recover the family as
+1,000-member family's bands, dd25/dd6/dd22 recover the family as
 one component through O(d) star edges, dd16's cap bounds PageRank's
 pair graph, dd24/dd26/s15 meet a 400-member single-cell embedding
 cluster, dd7/dd17/dd21 and the winnowing pair dd12/dd13 meet 20%-df
@@ -50,7 +50,6 @@ SKEW_QUERIES = [
     "dd5_jaccard_pairs",
     "dd6_dup_clusters",
     "dd7_jaccard_df_capped",
-    "dd9_dup_clusters_twostar",
     "dd12_winnow_pairs",
     "dd13_winnow_df_capped",
     "dd16_pagerank_dup_graph",
@@ -105,8 +104,8 @@ SKEW_QUERIES = [
     "t23_source_unigram_tvd",
 ]
 
-# Bench subset: the lever queries with meaningful data work. dd6/dd9/
-# dd22/dd16 are excluded for bench.py's standing reason — iterative
+# Bench subset: the lever queries with meaningful data work. dd6/dd22/
+# dd16 are excluded for bench.py's standing reason — iterative
 # jobs are ~90% fixed per-round scheduling overhead at this scale, so
 # their medians measure the scheduler, not the levers (they remain in
 # the correctness sweep above).

@@ -3,7 +3,7 @@ at sf0.1, and what would a stride-2 convergence check save?
 
 Phase 1 (this file, measurement only): instrument
 connected_components_twostar's signature() to count per-round wall
-time on the REAL dd9 edge set, and report the Spark job count per
+time on the REAL dd6 edge set, and report the Spark job count per
 full query via the status tracker.
 
 Usage: python tools/stride_probe.py [--sf /root/testdata/sf0.1]

@@ -10,7 +10,7 @@ star, intermediate distinct: ~6 Exchanges/round) against two rewrites:
       of groupBy+join-back                        -> ~3 Exchanges/round
 
 All three are run INTERLEAVED per iteration on the real LSH edge set of
-the dd9 corpus at --sf, timed end-to-end (loop to convergence, noop
+the dd6 corpus at --sf, timed end-to-end (loop to convergence, noop
 sink on the labels), and checked label-for-label identical via
 exceptAll both ways. Also reports the max collect_set buffer size the
 star aggregation would hold (the memory-contract check: bounded by
@@ -142,7 +142,7 @@ def main() -> None:
     spark = get_spark("twostar_probe")
     spark.sparkContext.setLogLevel("ERROR")
 
-    # the dd9 corpus: augmented docs, same as llm_q._augmented_docs
+    # the dd6 corpus: augmented docs, same as llm_q._augmented_docs
     from trello_github_etl_spark import registry
 
     registry.load_all()

@@ -377,21 +377,6 @@ def minhash_lsh_pairs(
     )
 
 
-# Star-edge hub shape (r14 ADVICE on the agg buffer; probe hook for
-# tools/staredge_probe.py): "agg" = the r14 groupBy(min,
-# collect_list)+explode form (one UNSPILLABLE ArrayBuffer per band
-# group — a multi-million-member band concentrates ~8 B/member in a
-# single task's agg buffer); "window" = hub min via a window over
-# partitionBy(band_key), whose per-group row buffer
-# (ExternalAppendOnlyUnsafeRowArray) SPILLS. Interleaved A/B at
-# sf0.1: agg 1.542 s vs window 1.586 s median — a wash locally,
-# identical edge sets (exceptAll 0), identical pass count and
-# shuffle bytes; window is the production default because it removes
-# the only per-group memory ceiling this operator had (this is THE
-# giant-dup-cluster path, SCALE.md lesson 35).
-_STAR_EDGE_SHAPE: str = "window"
-
-
 def lsh_candidate_edges(
     docs: DataFrame,
     text_col: str = "text",
@@ -413,55 +398,30 @@ def lsh_candidate_edges(
     verify each candidate pair (dd3's oracle contract, jaccard
     verification) keep the pair emitters.
 
-    Shape (r14 optimization): ONE groupBy(band_key) computing the hub
-    (min doc_id) and the member list together, then explode members
-    back out — a single pass over the banding subtree. The previous
-    agg + equi-join-back form needed the banded subtree on BOTH sides
-    of the band_key join, and those two sides can never share an
-    exchange: the aggregate side runs partial (map-side) min BELOW
-    its exchange while the probe side exchanges raw rows, so the
-    exchange inputs differ and ReusedExchange cannot fire — the
-    dominant tokenize→shingle→md5 signature pipeline executed twice
-    (measured at sf0.1, 10-run interleaved A/B: 2.77 s → 1.97 s
-    median; plan diff: 6 parquet scans → 3 — the 3-way augmented-docs
-    union's banding subtree now appears once — and the hub
-    BroadcastHashJoin disappears; see
-    plans/r14/edge_gen_star_plan_{before,after}.txt). Per-group buffer: the
-    collect_list is bounded by the band group's document frequency —
-    a 10k-member family buffers 10k bigints (~80 KB) in one agg
-    buffer, the same order as the group's shuffled rows, and
-    incomparably smaller than the O(d²) pair expansion this operator
-    exists to avoid (members within one band_key are unique, so
-    collect_list ≡ collect_set at list cost).
+    Shape: the hub is min(doc_id) over a window partitioned by
+    band_key, so the banding subtree runs once and every (band_key,
+    doc_id) row crosses one exchange. An agg + equi-join-back form
+    needs the banded subtree on both sides of the band_key join, and
+    those sides can never share an exchange (partial min below one,
+    raw rows below the other), so the tokenize→shingle→md5 signature
+    pipeline ran twice (r14, sf0.1, 10-run interleaved A/B: 2.77 s →
+    1.97 s median; plans/r14/edge_gen_star_plan_{before,after}.txt).
+    The window's per-group row buffer (ExternalAppendOnlyUnsafeRowArray)
+    SPILLS, so a multi-million-member band does not concentrate
+    ~8 B/member in one unspillable buffer the way a groupBy
+    collect_list of members would. Against that collect_list form the
+    interleaved A/B at sf0.1 was a wash (1.542 s vs 1.586 s median,
+    identical edge sets, pass count and shuffle bytes); the window
+    wins on the memory ceiling of this giant-dup-cluster path.
     """
-    banded = lsh_band_keys(docs, text_col, num_hashes, bands)
-    if _STAR_EDGE_SHAPE == "window":
-        # r15 (r14 ADVICE): same single-pass shape, but the hub min
-        # rides a window over partitionBy(band_key) instead of a
-        # collect_list agg buffer — the window's per-group row buffer
-        # (ExternalAppendOnlyUnsafeRowArray) SPILLS, so a
-        # multi-million-member band no longer concentrates ~8 B/member
-        # in one unspillable aggregation buffer. Identical edges,
-        # identical shuffle bytes (both ship every (band_key, doc_id)
-        # row through one exchange on band_key).
-        from pyspark.sql.window import Window
+    from pyspark.sql.window import Window
 
-        w = Window.partitionBy("band_key")
-        return (
-            banded.withColumn("_hub", F.min("doc_id").over(w))
-            .filter(F.col("doc_id") != F.col("_hub"))
-            .select(
-                F.col("_hub").alias("doc_a"), F.col("doc_id").alias("doc_b")
-            )
-            .distinct()
-        )
-    grouped = banded.groupBy("band_key").agg(
-        F.min("doc_id").alias("doc_a"),
-        F.collect_list("doc_id").alias("_members"),
-    )
+    banded = lsh_band_keys(docs, text_col, num_hashes, bands)
+    w = Window.partitionBy("band_key")
     return (
-        grouped.select("doc_a", F.explode("_members").alias("doc_b"))
-        .filter(F.col("doc_b") != F.col("doc_a"))
+        banded.withColumn("_hub", F.min("doc_id").over(w))
+        .filter(F.col("doc_id") != F.col("_hub"))
+        .select(F.col("_hub").alias("doc_a"), F.col("doc_id").alias("doc_b"))
         .distinct()
     )
 
@@ -763,22 +723,6 @@ def containment_pairs(
     )
 
 
-# Probe hook (tools/lazycc_probe.py): None = use each call site's
-# declared eagerness; True/False forces it globally for interleaved
-# A/B runs. Never set outside probes.
-_TRUNCATE_EAGER_OVERRIDE: bool | None = None
-
-# Probe hook: where the jump loop's shortcut half-step looks up
-# label-of-label. "labels" (production) = the round's already-
-# materialized input labels, l_in(l_step(u)) — no extra
-# materialization, no duplicated subtree. "stepped" = the half-step
-# plan itself, l_step(l_step(u)) (the pre-r15 dataflow: computes the
-# neighbor-min subtree on both sides of the join). "pinned" =
-# eagerly checkpoint the half-step first, then self-shortcut — one
-# extra job per round buys the stronger jump with no duplication.
-_JUMP_SHORTCUT: str = "labels"
-
-
 def _truncate_lineage(
     df: DataFrame, checkpoint_dir: str | None, eager: bool = True
 ) -> DataFrame:
@@ -812,8 +756,6 @@ def _truncate_lineage(
     idempotent and last-writer-wins, which is safe because the dir
     only namespaces where checkpoint files land.
     """
-    if _TRUNCATE_EAGER_OVERRIDE is not None:
-        eager = _TRUNCATE_EAGER_OVERRIDE
     if checkpoint_dir is None:
         return df.localCheckpoint(eager=eager)
     sc = df.sparkSession.sparkContext
@@ -850,7 +792,7 @@ def connected_components(
     rounds; sf1 fit inside the old cap of 25) crossed the cap.
     The loop now raises instead; callers with unknown-diameter
     graphs belong on connected_components_twostar (O(log² n) rounds
-    regardless of diameter — dd9 passed the same 50× oracle the
+    regardless of diameter — it passed the same 50× oracle the
     capped loop failed).
     """
     if max_iter < 1:
@@ -929,137 +871,6 @@ def connected_components(
     )
 
 
-def connected_components_jump(
-    pairs: DataFrame,
-    src: str = "doc_a",
-    dst: str = "doc_b",
-    max_iter: int = 32,
-    checkpoint_dir: str | None = None,
-) -> DataFrame:
-    """connected_components with POINTER JUMPING (Shiloach–Vishkin
-    shortcutting): each round appends one labels⋈labels self-join
-    (label ← label-of-label) to the neighbor-min step, squaring the
-    label-chain reach per round, so convergence takes O(log diameter)
-    rounds instead of O(diameter).
-
-    Why it exists (r14 close profile, COVERAGE.md): dd6's CC loop
-    cost is rounds × ~0.45 s near-constant scheduling overhead, and
-    the round count tracks corpus diameter — 4 rounds at sf0.1,
-    24 at sf1, 38 at the 50× corpus (the r12 non-convergence
-    finding). Shortcutting turns 24 → ~6 and caps growth at larger
-    scales. This has been the PRODUCTION path under dup_clusters
-    (dd6) since r14 (r14 ADVICE: the earlier 'candidate for r15'
-    phrasing was stale the moment the wiring landed).
-
-    Correctness argument (pinned by equivalence tests): labels are
-    initialized to own node id and only ever decrease to ids of
-    same-component nodes. Neighbor-min preserves that (the min
-    includes self and direct neighbors); the shortcut sets
-    l(u) ← l_in(l_step(u)) — label-of-label through the round's
-    INPUT label table (r15: the input is already materialized, so
-    the lookup side costs nothing extra; shortcutting through the
-    half-step plan itself would compute the neighbor-min subtree on
-    both sides of the join). l_step(u) is a same-component node id
-    and l_in maps node ids to same-component label values ≤ the id
-    (labels only decrease from own id), so the update stays
-    same-component and monotone. At the loop's exit (l_new = l_in
-    everywhere) no node had l_step(u) < l_in(u) — since
-    l_in(x) ≤ x would then force l_new(u) ≤ l_step(u) < l_in(u) —
-    so l_in is a neighbor-min fixpoint: labels constant per
-    component (symmetrized edges force l(u) = l(v) across every
-    edge) and the component's min node keeps its own id. The
-    fixpoint is exactly connected_components' output: (node, min
-    reachable node). Non-convergence raises, same contract as the
-    plain loop.
-    """
-    if max_iter < 1:
-        raise ValueError(f"max_iter must be >= 1, got {max_iter}")
-    e = pairs.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-    edges = e.unionByName(
-        e.select(F.col("v").alias("u"), F.col("u").alias("v"))
-    ).cache()
-    labels = _truncate_lineage(
-        edges.select("u").distinct()
-        .select(F.col("u").alias("node"), F.col("u").alias("label")),
-        checkpoint_dir,
-    )
-
-    for _ in range(max_iter):
-        neighbor_min = (
-            edges.join(labels, edges["v"] == labels["node"], "inner")
-            .select(F.col("u").alias("nbr_node"), "label")
-            .groupBy("nbr_node")
-            .agg(F.min("label").alias("nmin"))
-        )
-        stepped = labels.join(
-            neighbor_min, labels["node"] == neighbor_min["nbr_node"], "left"
-        ).select(
-            "node",
-            F.col("label").alias("old_label"),
-            F.least(
-                F.col("label"), F.coalesce(F.col("nmin"), F.col("label"))
-            ).alias("label"),
-        )
-        # the shortcut half-step: label <- label(label). Every label
-        # value is a node id present in the lookup side (labels only
-        # take endpoint ids), so the left join always matches;
-        # coalesce guards the invariant anyway. One extra exchange
-        # per round buys exponentially fewer rounds — at ~0.45 s
-        # fixed cost per round, that trade wins from diameter ~6 up.
-        #
-        # r15: the lookup table is the round's INPUT labels (already
-        # materialized by the previous round's truncation), NOT
-        # `stepped` itself — stepped is a lazy plan, and feeding it
-        # to both sides of the shortcut join would compute the
-        # neighbor-min subtree twice inside one job (two independent
-        # exchange stages below the join; see _truncate_lineage).
-        # The jump is one step lagged — l_new(u) = l_in(l_step(u))
-        # instead of l_step(l_step(u)) — which preserves the
-        # monotone same-component invariant (l_in is a label state
-        # on the same trajectory) and the fixpoint (at exit
-        # l_new = l_in, forcing l_step = l_in, the neighbor-min
-        # fixpoint), at worst one extra round; equivalence pinned by
-        # tests/test_cc_jump.py and the sf0.1/sf1 exceptAll probes.
-        if _JUMP_SHORTCUT == "pinned":
-            stepped = stepped.localCheckpoint(eager=True)
-            target = stepped
-        elif _JUMP_SHORTCUT == "stepped":
-            target = stepped
-        else:
-            target = labels
-        target = target.select(
-            F.col("node").alias("t_node"), F.col("label").alias("t_label")
-        )
-        joined = _truncate_lineage(
-            stepped.join(
-                target, stepped["label"] == target["t_node"], "left"
-            ).select(
-                "node",
-                "old_label",
-                F.coalesce(F.col("t_label"), F.col("label")).alias("label"),
-            ),
-            checkpoint_dir,
-            eager=False,
-        )
-        changed = joined.filter(F.col("label") != F.col("old_label")).count()
-        labels = joined.select("node", "label")
-        if changed == 0:
-            break
-    else:
-        edges.unpersist()
-        raise RuntimeError(
-            f"connected_components_jump did not converge in {max_iter} "
-            f"rounds ({changed} labels still changing) — with "
-            "shortcutting this bounds component count growth at "
-            "~2^(2^rounds); a non-convergence here means max_iter is "
-            "set far too low or the edge frame is non-deterministic."
-        )
-    edges.unpersist()
-    return labels.select(
-        F.col("node").alias("doc_id"), F.col("label").alias("cluster_id")
-    )
-
-
 def connected_components_auto(
     pairs: DataFrame,
     src: str = "doc_a",
@@ -1081,8 +892,8 @@ def connected_components_auto(
     min-root gives the IDENTICAL (node, min-reachable-id) labels.
     Above the cutoff the iterative operator runs unchanged, so the
     100 TB path never collects; this is runtime size-based plan
-    choice, exactly AQE's move.  dd6/dd9 deliberately keep the pure
-    iterative/two-star operators — they ARE the giant-graph path."""
+    choice, exactly AQE's move.  dd6 deliberately keeps the two-star
+    operator — it IS the giant-graph path."""
     e = pairs.select(F.col(src).alias("u"), F.col(dst).alias("v"))
     # eager=False: the size-probe count right below materializes the
     # edge list (and the collect / iterative fallback then reads the
@@ -1294,7 +1105,7 @@ def connected_components_twostar(
     ``localCheckpoint`` truncates per-round lineage.
 
     r14 round-body surgery (guide §2.4, measured 2.76 s → 2.14 s
-    median on the real sf0.1 dd9 edge set, 6 → 3 Exchanges/round,
+    median on the real sf0.1 dd6 edge set, 6 → 3 Exchanges/round,
     labels bit-identical — tools/twostar_probe.py):
     - large-star attaches the per-node min via a window over
       ``partitionBy(u)`` instead of groupBy+join-back: one exchange
@@ -1310,7 +1121,7 @@ def connected_components_twostar(
       collect_set holds each node's DISTINCT big→small targets,
       i.e. group-mins of the groups it belongs to. Buffer bound
       (r14 ADVICE, scoped correctly): for LSH-derived edges
-      (dup_clusters_twostar) that is the per-doc band count
+      (dup_clusters) that is the per-doc band count
       (measured max 2 at sf0.1 round 1; a star hub's members each
       hold exactly {hub}); for ARBITRARY edge inputs this is a
       public general-graph operator and the set is bounded only by
@@ -1440,38 +1251,18 @@ def dup_clusters(
     test_lsh_star_edges_same_components) and a 10k-member dup
     cluster stays linear (r7 skew stress, SCALE.md lesson 35).
 
-    Routing history (VERDICT r14 #2, decided r15): r14 wired this
-    through pointer jumping (O(log d) rounds; closed the r12
-    38-round failure class vs the plain O(diameter) loop). This
-    round's interleaved A/B on the real sf1 edge set, AFTER both
-    loops got the fused per-round action (r15), settled the standing
-    jump-vs-twostar trade: two-star 3.60 s vs jump 5.11 s median
-    (r14's pre-fusion numbers 5.16 vs 7.99 agreed in direction).
-    Two-star also carries the stronger scale contract — O(log² n)
-    rounds regardless of diameter AND a monotonically shrinking edge
-    set per round, where the jump loop joins the FULL edge list
-    every round. dup_clusters therefore now routes through
-    connected_components_twostar (making dd6 computationally
-    identical to dd9 — they share one oracle; recorded in
-    COVERAGE.md). Labels are node-for-node identical across all
-    three loops (the min-reachable fixpoint is unique;
-    equivalence-tested in tests/test_cc_jump.py and the lazycc
-    probes' exceptAll receipts at sf0.1 + sf1).
-    connected_components_jump remains the public moderate-diameter
-    alternative."""
-    return connected_components_twostar(
-        lsh_candidate_edges(docs, text_col), checkpoint_dir=checkpoint_dir
-    )
-
-
-def dup_clusters_twostar(
-    docs: DataFrame,
-    text_col: str = "text",
-    checkpoint_dir: str | None = None,
-) -> DataFrame:
-    """LSH star edges → clusters via large-star/small-star (the
-    giant-component-safe path; same edge construction as
-    dup_clusters)."""
+    Components run on connected_components_twostar (VERDICT r14 #2,
+    decided r15): the interleaved A/B on the real sf1 edge set, with
+    every loop on the fused per-round action, measured two-star 3.60 s
+    vs Shiloach–Vishkin pointer jumping 5.11 s median (r14's
+    pre-fusion numbers 5.16 vs 7.99 agreed in direction). Two-star
+    also carries the stronger scale contract — O(log² n) rounds
+    regardless of diameter AND a monotonically shrinking edge set per
+    round, where min-label propagation joins the FULL edge list for
+    O(diameter) rounds (the r12 38-round failure class). Labels are
+    node-for-node identical to connected_components' (the
+    min-reachable fixpoint is unique;
+    test_twostar_components_match_propagation)."""
     return connected_components_twostar(
         lsh_candidate_edges(docs, text_col), checkpoint_dir=checkpoint_dir
     )
@@ -1741,25 +1532,6 @@ def winnow_pairs(
     )
 
 
-# How semantic_dedup's STATIC-centroid path pins the assignment
-# frame shared by the pair join's two sides and the final verdict
-# join (r15, VERDICT r14 #4). Probe hook for tools/dd15_probe.py;
-# production default "persist" — the r15 first-half landed
-# "checkpoint" off the sf0.1 A/B alone (no pin 4.47 / persist 3.36 /
-# checkpoint 3.05 s on dd15) and the sf1 close bench caught the
-# trade inverting BADLY at 10x: an ExistingRDD loses size statistics
-# (defaultSizeInBytes = "huge" — the same hazard pagerank's
-# edges_deg comment documents), so the pair/verdict joins over the
-# checkpointed frame replan as full two-sided shuffles. Interleaved
-# sf1 A/B: dd14 checkpoint 47.3 / none 14.4 / persist 20.1 s median
-# (persist wins 2/3 pairings), dd15 checkpoint ~14 / none 8.78 /
-# persist 4.26 s; sf0.1 three-shape re-run: dd14 persist 2.19 best,
-# dd15 persist 2.55 vs checkpoint 2.28 (wash). persist keeps
-# accurate stats AND computes the O(N·k·dim) assignment once —
-# verdict frames bit-identical under all three shapes.
-_SEMDEDUP_STATIC_PIN: str | None = "persist"
-
-
 def semantic_dedup_nlist(n: int) -> int:
     """Corpus-adaptive coarse-cell count — delegates to the canonical
     similarity.auto_nlist (ceil(√N) clamped to [16, 4096]; FAISS's
@@ -1866,10 +1638,23 @@ def semantic_dedup(
             "centroids or nlist, not both"
         )
     cells = ivf_assign(embeddings, centroids, 1, vec_col, id_col, cache_key)
-    if auto_k is None and _SEMDEDUP_STATIC_PIN == "persist":
+    if auto_k is None:
+        # Static-centroid path: one pin computes the O(N·k·dim)
+        # assignment once for the pair join's two sides and the final
+        # verdict join (r15, VERDICT r14 #4). persist, not
+        # localCheckpoint: an ExistingRDD loses size statistics
+        # (defaultSizeInBytes = "huge", the hazard pagerank's edges_deg
+        # comment documents), so joins over a checkpointed frame
+        # replan as full two-sided shuffles. The sf0.1 A/B alone had
+        # picked the checkpoint (dd15: no pin 4.47 / persist 3.36 /
+        # checkpoint 3.05 s) and the trade inverted at sf1.
+        # Interleaved sf1 A/B, median: dd14 checkpoint 47.3 / none
+        # 14.4 / persist 20.1 s (persist won 2 of 3 pairings); dd15
+        # checkpoint ~14 / none 8.78 / persist 4.26 s. sf0.1 three-shape
+        # re-run: dd14 persist 2.19 s best; dd15 persist 2.55 vs
+        # checkpoint 2.28 s (a wash). Verdict frames bit-identical
+        # under all three shapes.
         cells = cells.persist()
-    elif auto_k is None and _SEMDEDUP_STATIC_PIN == "checkpoint":
-        cells = cells.localCheckpoint(eager=True)
     pair_src = cells
     if auto_k is not None:
         # Auto path only (k=√N ⇒ enough cells for join parallelism):
@@ -2220,8 +2005,8 @@ def dup_cluster_keepers(
     the corpus-shrink plan a pipeline applies as an anti-join of
     non-keepers.
 
-    Scale shape: clustering is dd9's TWO-STAR path (banded LSH star
-    edges → large-star/small-star components; switched from dd6's
+    Scale shape: clustering is dup_clusters' TWO-STAR path (banded
+    LSH star edges → large-star/small-star components; switched from
     min-label propagation after the r12 50× sweep caught the
     diameter cap silently mislabeling — the decision stage must be
     diameter-proof because it runs on exactly the corpora whose
@@ -2240,9 +2025,7 @@ def dup_cluster_keepers(
         tokens,
     )
 
-    clusters = dup_clusters_twostar(
-        docs, text_col, checkpoint_dir=checkpoint_dir
-    )
+    clusters = dup_clusters(docs, text_col, checkpoint_dir=checkpoint_dir)
     # shared token projection: quality_score tokenizes twice
     # internally (SCALE.md lesson 38)
     qual = docs.select(

@@ -356,14 +356,6 @@ _CENTROID_CACHE: dict[str, list] = {}
 # seed-scan + k-row assignment job entirely.
 _GROUPED_SEED_CACHE: dict[str, tuple] = {}
 
-# ivf_assign_2level cold seed shape: "ckpt" pins the ≤k-row centroid
-# table with one eager localCheckpoint before the two seed collects
-# (one corpus pass per cold assignment); "legacy" is the pre-r15
-# shape whose supers collect and grouped.collect() each embedded the
-# corpus seed derivation (two passes), kept only for the interleaved
-# A/B in tools/seed2l_probe.py.
-_2LEVEL_SEED_SHAPE = "ckpt"
-
 
 def _collect_centroids(centroids: DataFrame, cache_key: str | None) -> list:
     """``cache_key`` IDENTIFIES THE CENTROID SET: a hit returns the
@@ -631,23 +623,23 @@ def ivf_assign_2level(
     COLD SEED PHASE IS ONE CORPUS PASS (r15, guide §1.2/§2.4): on a
     cold call (seed memos empty — which since bench.py's VERDICT r14
     #5 change is EVERY timed run) the supers collect inside the
-    seed-side ivf_assign AND ``grouped.collect()`` each embedded the
-    corpus seed derivation (the auto-seed TakeOrdered), i.e. two full
-    corpus passes per assignment. The cold path now pins the ≤k-row
-    centroid table with one eager ``localCheckpoint`` first, so both
-    collects read the pinned blocks — one corpus pass, identical
-    rows, no extra driver work (the rejected alternative — rebuild
-    driver-local frames from one full collect — doubled the k-row
-    py4j serialization ``grouped_b`` already pays and measured a
-    local wash; tools/seed2l_probe.py, OPTIMIZATION_r15.md). Warm
-    calls (both memos hit) never touch the frame and skip the pin.
+    seed-side ivf_assign and ``grouped.collect()`` would each embed
+    the corpus seed derivation (the auto-seed TakeOrdered), i.e. two
+    full corpus passes per assignment. The cold path therefore pins
+    the ≤k-row centroid table with one eager ``localCheckpoint``
+    first, so both collects read the pinned blocks — one corpus pass,
+    identical rows, no extra driver work (the rejected alternative —
+    rebuild driver-local frames from one full collect — doubled the
+    k-row py4j serialization ``grouped_b`` already pays and measured
+    a local wash; OPTIMIZATION_r15.md). Warm calls (both memos hit)
+    never touch the frame and skip the pin.
     """
     if k < 1:
         raise ValueError(f"k must be >= 1, got {k}")
     k1 = math.ceil(math.sqrt(k))
     skey = (cache_key + "|sup") if cache_key is not None else None
     gkey = (cache_key + "|grp") if cache_key is not None else None
-    if _2LEVEL_SEED_SHAPE == "ckpt" and (
+    if (
         skey is None
         or skey not in _CENTROID_CACHE
         or gkey is None
@@ -995,22 +987,13 @@ def quantized_topk(
 KMEANS_FIX = 1e9  # fixed-point quantum for reproducible accumulation
 
 
-# Probe hook: how kmeans_refine attaches the iteration>=2 refined
-# centroids. False = pre-r15 (collect + literal-inline, one driver
-# action per iteration); "broadcast" = one-row broadcast crossJoin
-# (measured: per-row BNLJ row-append cost at small k); "scalar" =
-# Spark 4 scalar subquery (runtime literal, no per-row copy, no
-# collect).
-_KMEANS_INPLAN_PACK: "bool | str" = "scalar"
-
-
 def kmeans_refine(
     vectors: DataFrame,
     centroids: DataFrame,
     n_iter: int = 2,
     vec_col: str = "embedding",
     id_col: str = "vec_id",
-    inplan_pack: "bool | str | None" = None,
+    inplan_pack: bool = True,
 ) -> DataFrame:
     """Lloyd iterations refining the IVF coarse quantizer, with
     bit-reproducible distributed means: each element is floored onto
@@ -1036,8 +1019,8 @@ def kmeans_refine(
     Every later iteration's centroids are a COMPUTED plan, and
     collecting them forced one extra driver action per iteration
     (s10 profile: 3 materialization actions per build). With
-    ``inplan_pack="scalar"`` (the default via _KMEANS_INPLAN_PACK)
-    the refined centroids instead ride a Spark 4 SCALAR SUBQUERY —
+    ``inplan_pack=True`` (the default) the refined centroids instead
+    ride a Spark 4 SCALAR SUBQUERY —
     packed into the same one-row array<struct<cid,cn,cv>> the
     >IVF_INLINE_MAX path ships, executed once per action and
     embedded as a runtime literal — so the whole n_iter-round build
@@ -1055,13 +1038,8 @@ def kmeans_refine(
     callers that immediately COLLECT the result (s10's ivf_topk
     serve build) should pass ``inplan_pack=False``: the fold only
     moves work between two driver-side actions and re-plans the
-    full chain, measured +0.40 s median. The "broadcast" variant
-    (one-row crossJoin) was measured and rejected: the 8 KB packed
-    row is appended to EVERY corpus row by the BNLJ (+0.65 s on
-    s10).
+    full chain, measured +0.40 s median.
     """
-    if inplan_pack is None:
-        inplan_pack = _KMEANS_INPLAN_PACK
     cents = centroids
     for i in range(n_iter):
         if i == 0 or not inplan_pack:
@@ -1075,30 +1053,20 @@ def kmeans_refine(
                 ).alias("_c")
             ).agg(F.sort_array(F.collect_list("_c")).alias("__cents__"))
             scores = _cell_scores_sql("`__cents__`", vec_col)
-            if inplan_pack == "scalar":
-                # Spark 4 scalar-subquery: the 1-row packed array
-                # executes once and lands in the plan as a runtime
-                # LITERAL — literal-speed folds (no 8 KB broadcast
-                # row appended to every corpus row, the BNLJ
-                # variant's per-row copy) and still zero driver
-                # collect round-trips.
-                assigned = (
-                    ensure_parallelism(vectors)
-                    .withColumn("__cents__", packed.scalar())
-                    .select(
-                        F.expr(_argmax_cid_sql(scores)).alias("cell"),
-                        F.col(vec_col),
-                    )
+            # Spark 4 scalar-subquery: the 1-row packed array executes
+            # once and lands in the plan as a runtime LITERAL —
+            # literal-speed folds with zero driver collect round-trips.
+            # A one-row broadcast crossJoin was measured and rejected:
+            # the BNLJ appends the 8 KB packed row to EVERY corpus row
+            # (+0.65 s on s10).
+            assigned = (
+                ensure_parallelism(vectors)
+                .withColumn("__cents__", packed.scalar())
+                .select(
+                    F.expr(_argmax_cid_sql(scores)).alias("cell"),
+                    F.col(vec_col),
                 )
-            else:
-                assigned = (
-                    ensure_parallelism(vectors)
-                    .crossJoin(F.broadcast(packed))
-                    .select(
-                        F.expr(_argmax_cid_sql(scores)).alias("cell"),
-                        F.col(vec_col),
-                    )
-                )
+            )
         pe = assigned.select(
             "cell", F.posexplode(F.col(vec_col)).alias("pos", "_x")
         ).select(

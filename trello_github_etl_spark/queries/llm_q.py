@@ -473,7 +473,7 @@ def dd25_lsh_star_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     SCALE.md lesson 35): per LSH band group, one edge from the
     group's min-doc_id hub to each other member — O(d) per d-member
     group where dd3's pair list is O(d²), with identical connected
-    components (dup_clusters/dd6/dd9/dd22 route through this;
+    components (dup_clusters/dd6/dd22 route through this;
     measured against a 10k-member dup family: 10,031 edges vs
     49,995,240 pairs, SKEW_sf1.json)."""
     return dedup.lsh_candidate_edges(_augmented_docs(spark, sf_dir))
@@ -966,9 +966,9 @@ def s3_embedding_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
 # result and fails the gate loudly on row count.
 LP_ROUNDS = 64
 
-# Shared by dd6 (min-label propagation) and dd9 (large-star/small-star):
-# both algorithms must produce the identical (doc_id, cluster_id=min
-# reachable) labeling, so one oracle checks both. The oracle replays
+# dd6's oracle (large-star/small-star in Spark) and the base of dd22's
+# keepers oracle: every components algorithm produces the identical
+# (doc_id, cluster_id=min reachable) labeling. The oracle replays
 # bounded-round min-label propagation (new lbl(u) = min over u's
 # closed neighborhood of previous lbls, via self-loop edges) rather
 # than the r2-era transitive CLOSURE — closure materializes O(sum of
@@ -1059,7 +1059,7 @@ _KEEPERS_ORACLE = f"""{_CLUSTERS_CTES},
 def dd22_dup_cluster_keepers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The dedup DECISION stage: elect the member to keep per
     near-dup cluster (quality argmax, doc_id tie-break) — the
-    corpus-shrink plan downstream of clustering (dd9's two-star path
+    corpus-shrink plan downstream of clustering (dd6's two-star path
     since r12: the decision stage must be diameter-proof). Exact-copy
     clusters resolve by tie-break; near-copy clusters by quality.
     See operators/dedup.dup_cluster_keepers (window + groupBy share
@@ -1070,8 +1070,11 @@ def dd22_dup_cluster_keepers(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query("dd6_dup_clusters", oracle=_CLUSTERS_ORACLE)
 def dd6_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """LSH pairs consolidated into duplicate clusters (iterative
-    min-label propagation; oracle = recursive-CTE transitive closure)."""
+    """LSH star edges consolidated into duplicate clusters with the
+    large-star/small-star algorithm (O(log² n) rounds independent of
+    component diameter — the safe path once corpora grow giant
+    boilerplate clusters). The oracle replays min-label propagation
+    to its fixpoint, which pins algorithm equivalence."""
     return dedup.dup_clusters(_augmented_docs(spark, sf_dir))
 
 
@@ -1135,16 +1138,6 @@ def dd10_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     return dedup.incremental_dedup(ensure_parallelism(batch), corpus_fps)
-
-
-@query("dd9_dup_clusters_twostar", oracle=_CLUSTERS_ORACLE)
-def dd9_dup_clusters_twostar(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Same clustering contract as dd6, computed with the
-    large-star/small-star algorithm (O(log² n) rounds independent of
-    component diameter — the safe path once corpora grow giant
-    boilerplate clusters). Checked against the identical
-    transitive-closure oracle, which pins algorithm equivalence."""
-    return dedup.dup_clusters_twostar(_augmented_docs(spark, sf_dir))
 
 
 @query(

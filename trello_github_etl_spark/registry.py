@@ -25,7 +25,9 @@ values order-insensitively but exactly):
 
 from __future__ import annotations
 
+import json
 from collections.abc import Callable
+from pathlib import Path
 from typing import Optional
 
 from pyspark.sql import DataFrame, SparkSession
@@ -59,103 +61,10 @@ ORACLES: dict[str, str] = {}
 # ceil(N / chunk) + 1 rounds — no query can hide from the driver
 # forever.
 #
-# MAINTENANCE RULE: at each round close, fold that round's actual
-# driver sample (the keys of CORRECTNESS_r{N}.json) into
-# DRIVER_SAMPLED_HISTORY below.
-
-# Every name that has appeared in any driver CORRECTNESS_r01..r15
-# artifact (union of their keys; regenerate with
-# `python -c "import json,glob; print(sorted(set().union(*[set(json.load(open(f))) for f in glob.glob('CORRECTNESS_r[0-9]*.json')])))"`).
-DRIVER_SAMPLED_HISTORY: frozenset[str] = frozenset({
-    "a1_order_markdown_checklist", "a2_order_issue_body",
-    "a3_distinct_report", "a5_revenue_rollup", "a6_count_distinct",
-    "a8_grouping_sets", "a9_priority_status_pivot",
-    "bloom1_runtime_filter", "canary_boolean_fps", "canary_date_fps",
-    "canary_timestamp_fps", "d1_monthly_revenue", "d2_date_parts",
-    "f10_task_type", "f11_env_dsl_parse", "f14_json_props_parse",
-    "f15_variant_props", "f1_bounty_parse", "f2_index_prefix_strip",
-    "f5_issue_body_render", "f9_username_normalize",
-    "f_parse_check_item_pipeline", "j13_top_order_per_customer",
-    "j14_null_safe_join", "j6c_fuzzy_blocked_join",
-    "mm6_video_frame_features", "o2_sorted_type_arrays",
-    "o6_first_label_warn", "setops_order_years",
-    "skew1_salted_event_rollup", "skew2_salted_join_rollup",
-    "sql1_region_revenue", "sql2_priority_rank_windows",
-    "sql3_status_case_rollup", "sql5_recursive_month_spine",
-    "sql6_lateral_topk_per_customer",
-    "a4_pricing_summary", "a7_priority_status_cube",
-    "as1_last_view_before_click", "as2_next_purchase_after_signup",
-    "bp1_quickview_rows", "bp2_card_issue_bodies", "cdc_creates",
-    "cdc_field_changes", "cdc_scd2_history", "cdc_state_merge",
-    "cdc_updates", "dd10_incremental_dedup", "dd11_triangle_counts",
-    "dd12_winnow_pairs", "dd13_winnow_df_capped", "dd14_semantic_dedup",
-    "dd15_semantic_dedup_nlist64", "dd16_pagerank_dup_graph",
-    "dd17_simhash_hamming_pairs", "dd18_split_leakage",
-    "dd19_near_dup_split_leakage", "dd1_exact_dups",
-    "dd20_train_decontaminate", "dd21_repeated_ngram_coverage",
-    "dd22_dup_cluster_keepers", "dd23_incremental_near_dedup",
-    "dd24_semantic_dedup_auto", "dd25_lsh_star_edges",
-    "dd26_semantic_dedup_blocked", "dd27_lsh_pairs_capped",
-    "dd28_span_dedup", "dd29_containment_pairs", "dd2_minhash_signatures",
-    "dd30_containment_capped", "dd31_url_canonical_dedup",
-    "dd32_incremental_semantic_dedup", "dd33_repeated_kgram_spans",
-    "dd34_cross_source_overlap", "dd35_incremental_semdedup_linear",
-    "dd3_minhash_lsh_pairs", "dd4_simhash", "dd5_jaccard_pairs",
-    "dd6_dup_clusters", "dd7_jaccard_df_capped", "dd8_decontaminate",
-    "dd9_dup_clusters_twostar", "dq1_expectations",
-    "dq2_referential_integrity", "f3_title_split", "ivm1_delta_merge",
-    "ivm2_retraction", "ivm3_rollup_cascade", "ivm4_join_view_delta",
-    "ivm5_signed_join_delta", "j10_left_enrich_sentinel",
-    "j1_order_line_rollup", "j2_customer_geo_rollup", "j3_explode_words",
-    "j6_fuzzy_substring_join", "j6b_fuzzy_username_lookup",
-    "j7_owner_resolution", "j8_status_map_rollup",
-    "j9_customers_with_orders_semi", "j9_customers_without_orders",
-    "mm1_decode_features", "mm2_resize_spec", "mm3_frame_samples",
-    "mm4_audio_segments", "mm5_image_ahash_pairs",
-    "o1_top3_orders_per_segment", "o4_top10_orders", "o5_orders_page",
-    "o7_keyset_page", "p1_filter_open_orders", "pct1_price_percentiles",
-    "pipe10_shard_plan", "pipe11_filter_stack", "pipe12_ccnet_stack",
-    "pipe13_provenance_stack", "pipe1_clean_corpus", "pipe2_source_cap",
-    "pipe3_token_chunks", "pipe4_concat_packing", "pipe5_greedy_pack",
-    "pipe6_corpus_shuffle", "pipe7_clean_shuffle_pack",
-    "pipe8_quality_filter", "pipe9_curriculum_order", "prof1_orders_stats",
-    "rj1_error_followup_stats", "s10_ivf_trained_topk",
-    "s11_random_projection", "s12_pq_topk", "s13_pq_rerank_topk",
-    "s14_matryoshka_rerank", "s15_mutual_knn_graph", "s16_margin_alignment",
-    "s17_hard_negative_mining", "s18_mutual_knn_linear",
-    "s19_margin_alignment_linear", "s1_cosine_topk",
-    "s20_hard_negatives_linear", "s2_lsh_topk", "s3_embedding_near_dups",
-    "s4_ivf_topk", "s5_multiprobe_lsh_topk", "s6_ivf_budgeted_topk",
-    "s7_int8_quantize", "s8_quantized_topk", "s9_kmeans_refine",
-    "samp1_stratified_split", "samp2_weighted_mix",
-    "samp3_temperature_rebalance", "samp4_per_source_sample",
-    "samp5_source_char_budget", "samp6_epoch_mix", "samp7_dsir_importance",
-    "t10_source_lang_chisq", "t11_cms_heavy_hitters", "t12_kmv_distinct",
-    "t13_doclen_percentiles", "t14_bigram_novelty", "t15_readability",
-    "t16_vocab_coverage", "t17_gopher_quality_rules", "t18_pii_scrub",
-    "t19_unigram_surprisal_buckets", "t19d_surprisal_column_fps",
-    "t1_token_stats", "t20_quality_classifier_deciles",
-    "t21_backoff_lm_ppl_deciles", "t22_domain_quality_rollup",
-    "t23_source_unigram_tvd", "t2_language_id", "t3_quality_scores",
-    "t4_fingerprints", "t5_tfidf_top_terms", "t6_subword_tokens",
-    "t7_pii_redaction", "t8_repetition_stats", "t8a_top_word_adaptive",
-    "t9_collapse_repeats", "zo1_zorder_key",
-    "a10_unpivot_metrics", "a11_latest_order_argmax",
-    "fz1_levenshtein_pairs", "hist1_price_histogram",
-    "hof1_quantity_array_ops", "prof2_moments", "prof3_mad_outliers",
-    "sql10_scalar_subquery_vs_avg", "sql4_customer_order_exists",
-    "sql7_grouping_sets_flags", "sql8_filtered_aggregates",
-    "sql9_in_subquery_semi", "tpch11_important_parts",
-    "tpch12_priority_lines", "tpch13_customer_distribution",
-    "tpch14_promo_effect", "tpch15_top_supplier",
-    "tpch16_supplier_count", "tpch17_small_qty_revenue",
-    "tpch18_large_orders", "tpch19_disjunctive_revenue",
-    "tpch20_excess_suppliers", "tpch21_waiting_supplier",
-    "tpch22_idle_customers", "tpch2_min_cost_supplier",
-    "tpch4_order_priority", "tpch6_revenue_change",
-    "tpch7_nation_volume", "tpch8_market_share", "tpch9_product_profit",
-    "w8_forward_fill",
-})
+# The sampled history is computed, not hand-kept: _prioritize() reads
+# the keys of every committed driver artifact (CORRECTNESS_r{N}.json
+# at the repo root), so a new round's artifact folds itself in.
+DRIVER_SAMPLED_HISTORY: frozenset[str] = frozenset()
 
 # Fixed canaries, present in EVERY round's window: the r12 driver-red
 # query + its per-column diagnostic + the two sibling decile controls
@@ -213,13 +122,24 @@ def rotation_plan(history: frozenset[str] | None = None) -> list[str]:
     return plan
 
 
+def _driver_sampled_history() -> frozenset[str]:
+    """Registered names present in any committed driver artifact
+    (union of the keys of the repo-root CORRECTNESS_r*.json files)."""
+    root = Path(__file__).resolve().parents[1]
+    sampled: set[str] = set()
+    for f in root.glob("CORRECTNESS_r[0-9]*.json"):
+        sampled.update(json.loads(f.read_text()))
+    return frozenset(sampled & QUERIES.keys())
+
+
 def _prioritize() -> None:
     """Rebuild QUERIES/ORACLES with the rotation plan first (original
     relative order for everything else). Idempotent: after the
     reorder, a re-run computes the same plan because the plan's names
     occupy the prefix in plan order and 'fresh' selection preserves
     relative order."""
-    global DRIVER_SAMPLE_PRIORITY
+    global DRIVER_SAMPLE_PRIORITY, DRIVER_SAMPLED_HISTORY
+    DRIVER_SAMPLED_HISTORY = _driver_sampled_history()
     DRIVER_SAMPLE_PRIORITY = rotation_plan()
     order = [n for n in DRIVER_SAMPLE_PRIORITY if n in QUERIES] + [
         n for n in QUERIES if n not in DRIVER_SAMPLE_PRIORITY
