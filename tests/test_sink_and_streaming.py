@@ -287,17 +287,17 @@ def test_stream_stream_click_attribution(spark, tmp_path):
 def test_stream_upserts_idempotent_across_batches(spark, tmp_path):
     """foreachBatch upsert loop: re-delivered entities sink nothing;
     state versions accumulate only genuine creates."""
+    from trello_github_etl_spark.plans.state_store import VersionedStateStore
     from trello_github_etl_spark.streaming.sink_stream import (
         read_state,
         stream_upserts,
     )
 
     src = str(tmp_path / "entities_src")
-    state_dir = str(tmp_path / "state")
+    store = VersionedStateStore(str(tmp_path / "state"))
     ckpt = str(tmp_path / "ckpt")
     log = str(tmp_path / "sent.jsonl")
     os.makedirs(src)
-    os.makedirs(state_dir)
 
     def write_batch(name, rows, age):
         p = os.path.join(src, name)
@@ -329,9 +329,8 @@ def test_stream_upserts_idempotent_across_batches(spark, tmp_path):
         .json(src)
     )
     q = (
-        stream_upserts(stream, state_dir, transport, SinkConfig(sleep_s=0.0),
+        stream_upserts(stream, store, ckpt, transport, SinkConfig(sleep_s=0.0),
                        sleep=lambda s: None)
-        .option("checkpointLocation", ckpt)
         .trigger(availableNow=True)
         .start()
     )
@@ -340,7 +339,7 @@ def test_stream_upserts_idempotent_across_batches(spark, tmp_path):
     sent = [json.loads(l)["id"] for l in open(log)]
     assert sorted(sent) == ["c1", "c2", "c3"]  # c1 exactly once
 
-    final = read_state(spark, state_dir)
+    final = read_state(spark, store)
     rows = {r.entity_id: r.issue_number for r in final.collect()}
     assert set(rows) == {"c1", "c2", "c3"}
     assert len(set(rows.values())) == 3  # dense unique issue numbers
@@ -370,7 +369,7 @@ def test_stream_rollup_incremental_equals_batch(spark, tmp_path):
         q = RS.stream_rollup(
             spark.readStream.schema(schema).parquet(src),
             state, ckpt, keys=["priority"], measures=measures,
-        )
+        ).trigger(availableNow=True).start()
         q.awaitTermination(120)
 
     run()
@@ -400,12 +399,46 @@ def test_stream_rollup_incremental_equals_batch(spark, tmp_path):
     q = RS.stream_rollup(
         spark.readStream.schema(schema).parquet(src),
         state, ckpt, keys=["priority"], measures=measures,
-    )
+    ).trigger(availableNow=True).start()
     q.awaitTermination(120)
     after_df, _ = RS.read_rollup(
         spark, state, "priority string, sum_price decimal(28,2), n_rows bigint"
     )
     assert sorted(map(tuple, after_df.collect())) == before
+
+
+def test_rollup_merge_from_stale_base_conflicts(spark, tmp_path, monkeypatch):
+    """A rollup merge computed from a base another writer has since
+    advanced must fail loudly, not publish over the competitor: while
+    batch 1's merge is in flight, batch 2 merges from the same base.
+    Batch 1's commit then raises CommitConflictError, and the state
+    keeps batches 0 and 2 with last_id == 2."""
+    from trello_github_etl_spark.plans.state_store import CommitConflictError
+    from trello_github_etl_spark.streaming import rollup_stream as RS
+
+    state = str(tmp_path / "rollup_state")
+    schema = "k string, v long, n_rows long"
+
+    def merge(rows, batch_id):
+        delta = spark.createDataFrame(rows, schema)
+        return RS.merge_rollup_delta(delta, state, batch_id, ["k"], ["v"])
+
+    assert merge([("a", 5, 1)], 0) is True
+
+    orig = RS.merge_agg_state
+
+    def racing(*args, **kwargs):
+        monkeypatch.setattr(RS, "merge_agg_state", orig)
+        assert merge([("b", 10, 1)], 2) is True  # the competing writer
+        return orig(*args, **kwargs)
+
+    monkeypatch.setattr(RS, "merge_agg_state", racing)
+    with pytest.raises(CommitConflictError):
+        merge([("c", 7, 1)], 1)
+
+    got, last_id = RS.read_rollup(spark, state, schema)
+    assert sorted(map(tuple, got.collect())) == [("a", 5, 1), ("b", 10, 1)]
+    assert last_id == 2
 
 
 def test_stream_incremental_dedup_exactly_once_corpus(spark, tmp_path):
@@ -568,14 +601,13 @@ def test_stream_sketch_incremental_equals_batch_and_skips_replay(
 
 
 def test_sketch_stream_tolerates_foreign_commits(spark, tmp_path):
-    """A store seeded by non-sketch commits must not crash the
-    batch-id gate (max over an empty filtered history)."""
+    """A store seeded by non-sketch commits must not trip the
+    batch-id gate: a commit without a batch id leaves it at -1."""
     from trello_github_etl_spark.plans.state_store import (
         VersionedStateStore,
     )
     from trello_github_etl_spark.streaming.sketch_stream import (
         apply_batch,
-        last_applied_batch,
     )
 
     store = VersionedStateStore(str(tmp_path / "cms"))
@@ -583,7 +615,7 @@ def test_sketch_stream_tolerates_foreign_commits(spark, tmp_path):
     store.commit(
         spark.createDataFrame([], "d long, cell long, cnt long")
     )
-    assert last_applied_batch(store) == -1
+    assert store.last_batch() == -1
     ok = apply_batch(
         spark,
         store,
@@ -597,14 +629,14 @@ def test_sketch_gate_survives_vacuum_and_foreign_commits(spark, tmp_path):
     """ADVICE r2: the replay gate must not regress when vacuum()
     rewrites history. Sequence that broke the history-derived gate:
     cms-batch commit → foreign commit → vacuum(keep_last=1) prunes the
-    cms-batch history entry → replay of the batch. The manifest-meta
-    gate must still report the applied batch and skip the replay."""
+    cms-batch history entry → replay of the batch. The manifest's
+    last_batch gate must still report the applied batch and skip the
+    replay."""
     from trello_github_etl_spark.plans.state_store import (
         VersionedStateStore,
     )
     from trello_github_etl_spark.streaming.sketch_stream import (
         apply_batch,
-        last_applied_batch,
         read_grid,
     )
 
@@ -616,8 +648,8 @@ def test_sketch_gate_survives_vacuum_and_foreign_commits(spark, tmp_path):
     # ...and vacuum prunes everything but the latest version
     store.vacuum(keep_last=1)
     assert all(not c.op.startswith("cms-batch:") for c in store.history())
-    # gate persisted in manifest meta, not prunable history
-    assert last_applied_batch(store) == 0
+    # gate persisted in the manifest, not prunable history
+    assert store.last_batch() == 0
     grid_before = sorted(map(tuple, read_grid(spark, store).collect()))
     assert apply_batch(spark, store, batch, 0) is False  # replay skipped
     assert (
@@ -1207,23 +1239,22 @@ def test_recover_orphans_unwedges_crashed_commit(spark, tmp_path):
     }
 
 
-def test_stream_dedup_crash_window_converges_on_restart(spark, tmp_path):
-    """End-to-end r11-verdict-#4: kill the dedup stream INSIDE the
-    commit window of batch 0 — after the fingerprint state write hits
-    disk, before the manifest publish — restart the SAME stream
-    (same checkpoint), and prove the corpus converges to exactly the
-    state a crash-free run produces. The foreachBatch failure keeps
-    the streaming checkpoint un-advanced, so batch 0 re-delivers;
-    stream_dedup's startup recover_orphans removes the unpublished
-    orphan that would otherwise wedge the retried commit."""
+def _crash_window_converges(spark, tmp_path, wire, read_state):
+    """Kill a stream INSIDE the commit window of batch 0 — after the
+    state write hits disk, before the manifest publish — restart the
+    SAME stream (same checkpoint), and return the crash-free run's state
+    after asserting the restarted run converged to it. The foreachBatch
+    failure keeps the streaming checkpoint un-advanced, so batch 0
+    re-delivers; the wiring's startup recover_orphans removes the
+    unpublished orphan that would otherwise wedge the retried commit.
+
+    ``wire(stream, state_root, checkpoint_dir)`` returns the loop's
+    DataStreamWriter; ``read_state(state_root)`` the sorted state rows.
+    """
     import json as _json
 
     from trello_github_etl_spark.plans.state_store import (
         VersionedStateStore,
-    )
-    from trello_github_etl_spark.streaming.dedup_stream import (
-        read_fps,
-        stream_dedup,
     )
 
     def make_source(d):
@@ -1240,42 +1271,33 @@ def test_stream_dedup_crash_window_converges_on_restart(spark, tmp_path):
             os.utime(p, (now - age, now - age))
         return src
 
-    def reader(src):
-        return (
+    def run(src, root, ckpt):
+        stream = (
             spark.readStream.schema("doc_id long, text string")
             .option("maxFilesPerTrigger", 1)
             .json(src)
         )
+        return wire(stream, root, ckpt).trigger(availableNow=True).start()
 
     # --- crash-free reference run ---
-    ref_store = VersionedStateStore(str(tmp_path / "fps_ref"))
-    q = (
-        stream_dedup(reader(make_source("src_ref")), ref_store,
-                     str(tmp_path / "ckpt_ref"))
-        .trigger(availableNow=True)
-        .start()
-    )
+    q = run(make_source("src_ref"), str(tmp_path / "state_ref"),
+            str(tmp_path / "ckpt_ref"))
     q.awaitTermination(180)
-    ref_fps = sorted(r.fp for r in read_fps(spark, ref_store).collect())
-    assert len(ref_fps) == 3
+    ref = read_state(str(tmp_path / "state_ref"))
 
     # --- injected run: crash before batch 0's manifest publish ---
     src = make_source("src_crash")
-    store = VersionedStateStore(str(tmp_path / "fps_crash"))
+    root = str(tmp_path / "state_crash")
     orig_publish = VersionedStateStore._publish
     crashed = {"n": 0}
     def crash_once(self, manifest):
-        if self is store and crashed["n"] == 0:
+        if self.root == root and crashed["n"] == 0:
             crashed["n"] = 1
             raise RuntimeError("injected crash before manifest publish")
         return orig_publish(self, manifest)
     VersionedStateStore._publish = crash_once
     try:
-        q = (
-            stream_dedup(reader(src), store, str(tmp_path / "ckpt_crash"))
-            .trigger(availableNow=True)
-            .start()
-        )
+        q = run(src, root, str(tmp_path / "ckpt_crash"))
         with pytest.raises(Exception):
             q.awaitTermination(180)
             if q.exception() is not None:
@@ -1283,19 +1305,66 @@ def test_stream_dedup_crash_window_converges_on_restart(spark, tmp_path):
     finally:
         VersionedStateStore._publish = orig_publish
 
+    store = VersionedStateStore(root)
     assert crashed["n"] == 1
     assert store.latest_version() == 0  # batch 0's publish never landed
-    orphan = os.path.join(store.root, "v00000001")
+    orphan = os.path.join(root, "v00000001")
     assert os.path.exists(orphan)  # ...but its state write did
 
     # --- restart: same checkpoint, same store root ---
-    store2 = VersionedStateStore(store.root)
-    q = (
-        stream_dedup(reader(src), store2, str(tmp_path / "ckpt_crash"))
-        .trigger(availableNow=True)
-        .start()
-    )
+    q = run(src, root, str(tmp_path / "ckpt_crash"))
     q.awaitTermination(180)
-    assert not os.path.exists(orphan) or store2.latest_version() >= 1
-    got = sorted(r.fp for r in read_fps(spark, store2).collect())
-    assert got == ref_fps  # identical corpus state, crash or no crash
+    assert not os.path.exists(orphan) or store.latest_version() >= 1
+    assert read_state(root) == ref  # identical state, crash or no crash
+    return ref
+
+
+def test_stream_dedup_crash_window_converges_on_restart(spark, tmp_path):
+    """End-to-end r11-verdict-#4 on the fingerprint state."""
+    from trello_github_etl_spark.plans.state_store import (
+        VersionedStateStore,
+    )
+    from trello_github_etl_spark.streaming.dedup_stream import (
+        read_fps,
+        stream_dedup,
+    )
+
+    ref_fps = _crash_window_converges(
+        spark,
+        tmp_path,
+        lambda stream, root, ckpt: stream_dedup(
+            stream, VersionedStateStore(root), ckpt
+        ),
+        lambda root: sorted(
+            r.fp for r in read_fps(spark, VersionedStateStore(root)).collect()
+        ),
+    )
+    assert len(ref_fps) == 3
+
+
+def test_stream_rollup_crash_window_converges_on_restart(spark, tmp_path):
+    """The same crash window on the rollup state: its replay gate must
+    not skip the re-delivered batch 0, and the restart must recover the
+    orphan rather than wedge on it."""
+    from trello_github_etl_spark.streaming.rollup_stream import (
+        read_rollup,
+        stream_rollup,
+    )
+
+    ref = _crash_window_converges(
+        spark,
+        tmp_path,
+        lambda stream, root, ckpt: stream_rollup(
+            stream, root, ckpt, keys=["text"],
+            measures={"id_sum": F.sum("doc_id")},
+        ),
+        lambda root: sorted(
+            map(
+                tuple,
+                read_rollup(
+                    spark, root, "text string, id_sum long, n_rows long"
+                )[0].collect(),
+            )
+        ),
+    )
+    assert len(ref) == 4

@@ -119,26 +119,23 @@ def with_owner_sentinels(df: DataFrame) -> DataFrame:
 def fuzzy_username_to_id(
     queries: DataFrame,
     members_dim: DataFrame,
+    order_col: str,
     query_col: str = "query_username",
-    order_col: str | None = None,
 ) -> DataFrame:
     """`trelloUsernameToId` (transform.js:189–211) as a set operator.
 
     Case-folds and @-strips the query, then finds the FIRST board
-    member whose username contains it ("first" = ``order_col`` order,
-    or physical dim order when omitted — board arrays preserve their
-    JSON order). Nulls propagate as no-match, mirroring the
+    member whose username contains it, "first" in ``order_col`` order
+    (the board array's JSON order; Spark has no stable physical order
+    to stand in for it). Nulls propagate as no-match, mirroring the
     reference's early return + warn.
     """
     from pyspark.sql.window import Window
 
     q = F.lower(F.regexp_replace(F.col(query_col), r"^@", ""))
-    ord_expr = (
-        F.col(order_col) if order_col else F.monotonically_increasing_id()
-    )
     dim = F.broadcast(
         members_dim.select(
-            ord_expr.alias("_ord"),
+            F.col(order_col).alias("_ord"),
             F.col("id").alias("member_id"),
             F.col("username").alias("member_username"),
         )

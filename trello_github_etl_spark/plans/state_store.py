@@ -42,28 +42,27 @@ Two guards provide that:
 True multi-writer (a commit log with conflict *resolution*, not just
 detection) remains what a real table format adds.
 
-Swap decision (re-checked each round, VERDICT r2 #8 / r3 #7 / r4 #7):
-delta-spark is still not importable (round 12, 2026-08-16: ``pip
-install delta-spark`` completes without installing — no package
-index egress — and ``import delta`` still fails; round 11 close:
-``import delta`` fails; the container has no package index egress —
-same result every round since r2), so the store stays. The swap recipe when it lands: DeltaTable.forPath +
+Swap decision (re-checked each round since VERDICT r2 #8): delta-spark
+is still not importable — the container has no package index egress —
+so the store stays. The swap recipe when it lands: DeltaTable.forPath +
 ``MERGE INTO`` replaces merge(); version time travel replaces
 read(version); the CAS tests in tests/test_state_store.py and the
-sketch replay-gate tests are the behavioral contract the Delta-backed
-implementation must keep passing (manifest ``meta`` maps onto Delta
-commit metadata / a sidecar table).
+streaming replay-gate tests are the behavioral contract the Delta-backed
+implementation must keep passing (the manifest's ``last_batch`` maps
+onto Delta's idempotent-write ``txnAppId``/``txnVersion``).
 """
 
 from __future__ import annotations
 
 import json
 import os
+import shutil
 import time
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from trello_github_etl_spark.plans.upserts import merge_state
 
@@ -97,7 +96,7 @@ class VersionedStateStore:
             with open(self._manifest_path()) as f:
                 return json.load(f)
         except FileNotFoundError:
-            return {"current": 0, "history": [], "meta": {}}
+            return {"current": 0, "history": []}
 
     def _publish(self, manifest: dict) -> None:
         tmp = self._manifest_path() + ".tmp"
@@ -112,12 +111,12 @@ class VersionedStateStore:
     def history(self) -> list[CommitInfo]:
         return [CommitInfo(**h) for h in self._read_manifest()["history"]]
 
-    def get_meta(self, key: str, default=None):
-        """Top-level manifest metadata: survives ``vacuum`` (which only
-        rewrites ``history``), so it is the durable home for facts that
-        must outlive pruned commits — e.g. a streaming replay gate's
-        last-applied batch id."""
-        return self._read_manifest().get("meta", {}).get(key, default)
+    def last_batch(self) -> int:
+        """The highest streaming batch id committed with ``batch_id=``,
+        -1 before any: the replay gate of every foreachBatch loop whose
+        merge is not idempotent. A top-level manifest field, so it
+        survives ``vacuum`` (which only rewrites ``history``)."""
+        return self._read_manifest().get("last_batch", -1)
 
     def _dir(self, version: int) -> str:
         return os.path.join(self.root, f"v{version:08d}")
@@ -127,7 +126,7 @@ class VersionedStateStore:
         df: DataFrame,
         op: str = "overwrite",
         expected_version: int | None = None,
-        meta: dict | None = None,
+        batch_id: int | None = None,
     ) -> int:
         """Write ``df`` as the next version and publish it.
 
@@ -139,10 +138,10 @@ class VersionedStateStore:
         fails loudly via the directory claim; only the stale-base
         lost-update window needs the explicit expectation.
 
-        ``meta`` entries are merged into the manifest's top-level
-        ``meta`` dict in the SAME atomic publish as the version flip —
-        one ``os.replace``, so a reader can never observe the commit
-        without its metadata (or vice versa).
+        ``batch_id`` becomes ``last_batch()`` in the SAME atomic
+        publish as the version flip — one ``os.replace``, so a reader
+        can never observe the commit without its gate (or vice versa).
+        A commit without it leaves the gate where it was.
         """
         m = self._read_manifest()
         if expected_version is not None and m["current"] != expected_version:
@@ -191,8 +190,6 @@ class VersionedStateStore:
             # write could be caught here — the inherent TOCTOU of a
             # directory claim, which is why the store is single-writer
             # by design.)
-            import shutil
-
             shutil.rmtree(path, ignore_errors=True)
             raise
         n = written.get["n"]
@@ -200,8 +197,6 @@ class VersionedStateStore:
         # have published while this one was writing parquet.
         m2 = self._read_manifest()
         if m2["current"] != version - 1:
-            import shutil
-
             shutil.rmtree(path, ignore_errors=True)
             raise CommitConflictError(
                 f"manifest advanced to v{m2['current']} during commit of "
@@ -211,8 +206,8 @@ class VersionedStateStore:
         m2["history"].append(
             {"version": version, "op": op, "n_rows": n, "ts": time.time()}
         )
-        if meta:
-            m2.setdefault("meta", {}).update(meta)
+        if batch_id is not None:
+            m2["last_batch"] = batch_id
         self._publish(m2)
         return version
 
@@ -238,12 +233,10 @@ class VersionedStateStore:
         proves end-to-end).
 
         MUST only run while no commit is in flight — i.e. at writer
-        startup/restart, which is where the stream_* wirings call it.
-        Published data is untouched by construction (only dirs
+        startup/restart, which is where ``streaming.foreach_batch``
+        calls it. Published data is untouched by construction (only dirs
         strictly above ``current`` are candidates), so time travel
-        and the replay-gate metadata survive."""
-        import shutil
-
+        and the replay gate survive."""
         current = self._read_manifest()["current"]
         removed = []
         for name in sorted(os.listdir(self.root)):
@@ -266,11 +259,20 @@ class VersionedStateStore:
                 removed.append(v)
         return removed
 
-    def read(self, spark: SparkSession, version: int | None = None) -> DataFrame:
-        """Latest snapshot, or time-travel to any committed version."""
+    def read(
+        self,
+        spark: SparkSession,
+        version: int | None = None,
+        empty: StructType | str | None = None,
+    ) -> DataFrame:
+        """Latest snapshot, or time-travel to any committed version.
+        Before the first commit (version 0) this is an empty frame of
+        schema ``empty``, or an error when none is given."""
         m = self._read_manifest()
         v = m["current"] if version is None else version
         if v == 0:
+            if empty is not None:
+                return spark.createDataFrame([], empty)
             raise ValueError("state store has no committed version")
         committed = {h["version"] for h in m["history"]}
         if v not in committed:
@@ -296,8 +298,6 @@ class VersionedStateStore:
         """Drop unpublished orphans and all but the last ``keep_last``
         committed versions (rewrites history accordingly). Returns the
         removed version numbers."""
-        import shutil
-
         m = self._read_manifest()
         keep = {
             h["version"] for h in m["history"][-keep_last:]

@@ -45,6 +45,7 @@ from pyspark.sql import functions as F
 from trello_github_etl_spark.operators.textstats import token_count
 from trello_github_etl_spark.plans.state_store import VersionedStateStore
 from trello_github_etl_spark.sources.rest_sink import SinkConfig, run_sink
+from trello_github_etl_spark.streaming import foreach_batch
 from trello_github_etl_spark.streaming.neardup_stream import (
     admit_kept,
     classify_batch,
@@ -155,14 +156,14 @@ def stream_ingest(
     on_batch: Callable[[int, DataFrame], None] | None = None,
     **kwargs,
 ):
-    """Wire the composed batch plan into foreachBatch. ``on_batch``
-    receives (batch_id, verdicts) for observability/testing."""
-    # startup crash recovery — see stream_dedup's note /
-    # VersionedStateStore.recover_orphans
-    band_store.recover_orphans()
-
-    def handle(batch: DataFrame, batch_id: int) -> None:
-        verdicts = ingest_batch(
+    """``streaming.foreach_batch`` over ``ingest_batch``; ``on_batch``
+    gets the verdicts. Both stores the loop commits to — the band
+    state and the token ledger — get startup orphan recovery."""
+    return foreach_batch(
+        stream,
+        [band_store, VersionedStateStore(token_ledger_dir(rollup_dir))],
+        checkpoint_dir,
+        lambda batch, batch_id: ingest_batch(
             batch.sparkSession,
             band_store,
             rollup_dir,
@@ -170,12 +171,6 @@ def stream_ingest(
             batch_id,
             transport,
             **kwargs,
-        )
-        if on_batch is not None:
-            on_batch(batch_id, verdicts)
-
-    return (
-        stream.writeStream.foreachBatch(handle)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
+        ),
+        on_batch,
     )

@@ -23,15 +23,14 @@ from pyspark.sql.types import StringType, StructField, StructType
 
 from trello_github_etl_spark.operators.dedup import incremental_dedup
 from trello_github_etl_spark.plans.state_store import VersionedStateStore
+from trello_github_etl_spark.streaming import foreach_batch
 
 FP_SCHEMA = StructType([StructField("fp", StringType())])
 
 
 def read_fps(spark: SparkSession, store: VersionedStateStore) -> DataFrame:
     """Current fingerprint state; empty before the first commit."""
-    if store.latest_version() == 0:
-        return spark.createDataFrame([], FP_SCHEMA)
-    return store.read(spark)
+    return store.read(spark, empty=FP_SCHEMA)
 
 
 def dedup_batch(
@@ -68,22 +67,12 @@ def stream_dedup(
     checkpoint_dir: str,
     on_batch: Callable[[int, DataFrame], None] | None = None,
 ):
-    """Wire the batch plan into foreachBatch. ``on_batch`` receives
-    (batch_id, verdicts) for observability/testing."""
-    # startup crash recovery: a crash between a batch's state write
-    # and its manifest publish leaves an unpublished orphan that
-    # would wedge the first retried commit into a bogus conflict —
-    # see VersionedStateStore.recover_orphans (single-writer safe:
-    # this wiring IS the one writer, and it is not yet running)
-    store.recover_orphans()
-
-    def handle(batch: DataFrame, batch_id: int) -> None:
-        verdicts = dedup_batch(batch.sparkSession, store, batch)
-        if on_batch is not None:
-            on_batch(batch_id, verdicts)
-
-    return (
-        stream.writeStream.foreachBatch(handle)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
+    """``streaming.foreach_batch`` over the batch plan; ``on_batch``
+    gets the verdicts."""
+    return foreach_batch(
+        stream,
+        [store],
+        checkpoint_dir,
+        lambda batch, _: dedup_batch(batch.sparkSession, store, batch),
+        on_batch,
     )

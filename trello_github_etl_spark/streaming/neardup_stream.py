@@ -38,15 +38,14 @@ from trello_github_etl_spark.operators.dedup import (
     lsh_band_keys,
 )
 from trello_github_etl_spark.plans.state_store import VersionedStateStore
+from trello_github_etl_spark.streaming import foreach_batch
 
 BAND_SCHEMA = StructType([StructField("band_key", StringType())])
 
 
 def read_bands(spark: SparkSession, store: VersionedStateStore) -> DataFrame:
     """Current band-bucket state; empty before the first commit."""
-    if store.latest_version() == 0:
-        return spark.createDataFrame([], BAND_SCHEMA)
-    return store.read(spark)
+    return store.read(spark, empty=BAND_SCHEMA)
 
 
 def classify_batch(
@@ -129,19 +128,12 @@ def stream_near_dedup(
     checkpoint_dir: str,
     on_batch: Callable[[int, DataFrame], None] | None = None,
 ):
-    """Wire the batch plan into foreachBatch. ``on_batch`` receives
-    (batch_id, verdicts) for observability/testing."""
-    # startup crash recovery — see stream_dedup's note /
-    # VersionedStateStore.recover_orphans
-    store.recover_orphans()
-
-    def handle(batch: DataFrame, batch_id: int) -> None:
-        verdicts = near_dedup_batch(batch.sparkSession, store, batch)
-        if on_batch is not None:
-            on_batch(batch_id, verdicts)
-
-    return (
-        stream.writeStream.foreachBatch(handle)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
+    """``streaming.foreach_batch`` over the batch plan; ``on_batch``
+    gets the verdicts."""
+    return foreach_batch(
+        stream,
+        [store],
+        checkpoint_dir,
+        lambda batch, _: near_dedup_batch(batch.sparkSession, store, batch),
+        on_batch,
     )

@@ -3,42 +3,35 @@
 IVM delta-merge (operators/ivm.py) instead of recomputing.
 
 Per micro-batch: aggregate the batch to delta state (exact decimal
-measures), merge into the versioned state table, flip the LATEST
-pointer (same atomic read-current / write-next / pointer-swap
-transaction as sink_stream.py). Work per batch is |batch| + |state of
-affected keys| with one shuffle on the group keys — the base stream
-is never replayed, which is what makes a 100 TB/day rollup
-maintainable. With Delta available, the pointer dance collapses into
+measures), merge it into the current rollup, and commit the result
+through the versioned state store's CAS. Work per batch is |batch| +
+|state of affected keys| with one shuffle on the group keys — the base
+stream is never replayed, which is what makes a 100 TB/day rollup
+maintainable. With Delta available, the merge collapses into
 ``MERGE INTO``.
 
 At-least-once caveat: plain additive merge double-counts a replayed
-batch, so the state records the last merged batch_id and the merge
-skips batches at-or-below it (the checkpoint replays whole batches
-with stable ids — monotone gate ⇒ effectively-once).
+batch, so each commit records its batch id (``store.last_batch()``)
+and the merge skips batches at-or-below it (the checkpoint replays
+whole batches with stable ids — monotone gate ⇒ effectively-once).
 """
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.streaming import StreamingQuery
 
 from trello_github_etl_spark.operators.ivm import merge_agg_state
+from trello_github_etl_spark.plans.state_store import VersionedStateStore
+from trello_github_etl_spark.streaming import foreach_batch
 
 
 def read_rollup(
     spark: SparkSession, state_dir: str, schema: str
 ) -> tuple[DataFrame, int]:
     """(current rollup, last merged batch_id); empty/-1 before batch 0."""
-    pointer = os.path.join(state_dir, "LATEST")
-    if not os.path.exists(pointer):
-        return spark.createDataFrame([], schema), -1
-    with open(pointer) as f:
-        version = f.read().strip()
-    df = spark.read.schema(schema).parquet(os.path.join(state_dir, version))
-    return df, int(version[1:])
+    store = VersionedStateStore(state_dir)
+    return store.read(spark, empty=schema), store.last_batch()
 
 
 def merge_rollup_delta(
@@ -53,22 +46,19 @@ def merge_rollup_delta(
     state at ``state_dir``; returns False when ``batch_id`` was
     already merged (the effectively-once replay gate). Factored out of
     stream_rollup so composed pipelines (composed_stream.py) share the
-    identical gate + pointer-flip transaction instead of forking it.
+    identical gate + commit instead of forking it. A merge computed
+    from a base another writer has since advanced fails with
+    ``CommitConflictError`` instead of dropping that writer's rows.
+    The gate assumes state_dir lives and dies with the checkpoint
+    (``streaming.foreach_batch``).
     """
-    spark = delta.sparkSession
-    schema_str = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}" for f in delta.schema.fields
-    )
-    state, last_id = read_rollup(spark, state_dir, schema_str)
-    if batch_id <= last_id:
-        # replayed batch: already merged (effectively-once).
-        # OPERATIONAL CONSTRAINT (r4 code review): batch ids are a
-        # property of the streaming CHECKPOINT lineage — if the
-        # checkpoint is reset while state_dir survives, the new
-        # lineage restarts at batch 0 and this gate would silently
-        # skip genuinely new batches up to last_id. state_dir and
-        # checkpoint_dir must live and die TOGETHER.
-        return False
+    store = VersionedStateStore(state_dir)
+    # base BEFORE the gate: a commit landing between the two reads
+    # then fails the CAS instead of slipping past the gate
+    base = store.latest_version()
+    if batch_id <= store.last_batch():
+        return False  # replayed batch: already merged
+    state = store.read(delta.sparkSession, base, empty=delta.schema)
     merged = merge_agg_state(state, delta, keys, measure_names, count_col)
     # SUM widens decimal precision per merge (18,2 -> 28,2 ->
     # 38,2); pin measures back to the delta's types so the stored
@@ -86,12 +76,9 @@ def merge_rollup_delta(
             if f.name not in keys
         ],
     )
-    version = f"v{batch_id}"
-    merged.write.mode("overwrite").parquet(os.path.join(state_dir, version))
-    tmp = os.path.join(state_dir, "LATEST.tmp")
-    with open(tmp, "w") as f:
-        f.write(version)
-    os.replace(tmp, os.path.join(state_dir, "LATEST"))
+    store.commit(
+        merged, op="rollup-batch", expected_version=base, batch_id=batch_id
+    )
     return True
 
 
@@ -102,27 +89,23 @@ def stream_rollup(
     keys: list[str],
     measures: dict[str, "F.Column"],
     count_col: str = "n_rows",
-) -> StreamingQuery:
+):
     """Maintain ``groupBy(keys).agg(measures, count)`` over a stream.
 
     ``measures`` maps output column name → exact-typed aggregate
     expression evaluated per micro-batch (decimal sums, counts —
     anything addition-mergeable).
     """
-    os.makedirs(state_dir, exist_ok=True)
 
-    def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
+    def merge_batch(batch_df: DataFrame, batch_id: int) -> bool:
         delta = batch_df.groupBy(*keys).agg(
             *[expr.alias(name) for name, expr in measures.items()],
             F.count(F.lit(1)).alias(count_col),
         )
-        merge_rollup_delta(
+        return merge_rollup_delta(
             delta, state_dir, batch_id, keys, list(measures.keys()), count_col
         )
 
-    return (
-        batches.writeStream.foreachBatch(merge_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return foreach_batch(
+        batches, [VersionedStateStore(state_dir)], checkpoint_dir, merge_batch
     )

@@ -44,6 +44,7 @@ from trello_github_etl_spark.operators.dedup import (
     incremental_semantic_dedup,
 )
 from trello_github_etl_spark.plans.state_store import VersionedStateStore
+from trello_github_etl_spark.streaming import foreach_batch
 
 
 def read_exemplars(
@@ -56,11 +57,7 @@ def read_exemplars(
     """Current committed exemplar state; before the first commit, an
     empty frame typed like the batch (the element type — float vs
     double — must match the corpus, so it is derived, not assumed)."""
-    if store.latest_version() == 0:
-        return spark.createDataFrame(
-            [], like.select(id_col, vec_col).schema
-        )
-    return store.read(spark)
+    return store.read(spark, empty=like.select(id_col, vec_col).schema)
 
 
 def semantic_dedup_batch(
@@ -122,21 +119,14 @@ def stream_semantic_dedup(
     threshold: float = 0.92,
     on_batch: Callable[[int, DataFrame], None] | None = None,
 ):
-    """Wire the batch plan into foreachBatch. ``on_batch`` receives
-    (batch_id, verdicts) for observability/testing."""
-    # startup crash recovery — see stream_dedup's note /
-    # VersionedStateStore.recover_orphans
-    store.recover_orphans()
-
-    def handle(batch: DataFrame, batch_id: int) -> None:
-        verdicts = semantic_dedup_batch(
+    """``streaming.foreach_batch`` over the batch plan; ``on_batch``
+    gets the verdicts."""
+    return foreach_batch(
+        stream,
+        [store],
+        checkpoint_dir,
+        lambda batch, _: semantic_dedup_batch(
             batch.sparkSession, store, centroids, batch, threshold
-        )
-        if on_batch is not None:
-            on_batch(batch_id, verdicts)
-
-    return (
-        stream.writeStream.foreachBatch(handle)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
+        ),
+        on_batch,
     )

@@ -8,21 +8,22 @@ migration phase. Re-delivered entities plan zero work (ST1/ST2
 idempotency), so at-least-once delivery composes to effectively-once
 against the idempotent sink.
 
-State versioning: each batch writes ``state_dir/v{batch_id}`` and
-flips a ``LATEST`` pointer file afterwards — a poor-man's transaction
-log (read-current / write-next / atomic pointer swap). With Delta
-available, the pointer dance collapses into ``MERGE INTO`` on one
-table; the plan shape is unchanged.
+State versioning: each batch commits the merged state through the
+versioned state store's CAS, carrying the version its plan read as the
+expected base, so a batch planned from a stale state fails loudly
+instead of overwriting a competing writer's rows. With Delta available,
+the commit collapses into ``MERGE INTO`` on one table; the plan shape is
+unchanged.
 """
 
 from __future__ import annotations
 
-import os
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from trello_github_etl_spark.plans.state_store import VersionedStateStore
 from trello_github_etl_spark.plans.upserts import (
     M_CREATED,
     STATE_SCHEMA,
@@ -30,27 +31,12 @@ from trello_github_etl_spark.plans.upserts import (
     plan_upserts,
 )
 from trello_github_etl_spark.sources.rest_sink import SinkConfig, run_sink
+from trello_github_etl_spark.streaming import foreach_batch
 
 
-def read_state(spark: SparkSession, state_dir: str) -> DataFrame:
+def read_state(spark: SparkSession, store: VersionedStateStore) -> DataFrame:
     """Current state version, or an empty frame before the first batch."""
-    pointer = os.path.join(state_dir, "LATEST")
-    if not os.path.exists(pointer):
-        return spark.createDataFrame([], STATE_SCHEMA)
-    with open(pointer) as f:
-        version = f.read().strip()
-    return spark.read.schema(STATE_SCHEMA).parquet(
-        os.path.join(state_dir, version)
-    )
-
-
-def _commit_state(state: DataFrame, state_dir: str, batch_id: int) -> None:
-    version = f"v{batch_id}"
-    state.write.mode("overwrite").parquet(os.path.join(state_dir, version))
-    tmp = os.path.join(state_dir, "LATEST.tmp")
-    with open(tmp, "w") as f:
-        f.write(version)
-    os.replace(tmp, os.path.join(state_dir, "LATEST"))  # atomic flip
+    return store.read(spark, empty=STATE_SCHEMA)
 
 
 def shape_created_state(creates: DataFrame, first_number: int) -> DataFrame:
@@ -76,17 +62,18 @@ def shape_created_state(creates: DataFrame, first_number: int) -> DataFrame:
 
 def stream_upserts(
     entities: DataFrame,
-    state_dir: str,
+    store: VersionedStateStore,
+    checkpoint_dir: str,
     transport: Callable[[dict], None],
     cfg: SinkConfig | None = None,
     sleep: Callable[[float], None] | None = None,
-) -> "DataStreamWriter":  # noqa: F821 - pyspark forward name
-    """writeStream.foreachBatch pipeline; caller adds checkpoint/trigger
-    options and .start()."""
+):
+    """Wire the per-batch CDC plan into foreachBatch."""
 
     def process_batch(batch: DataFrame, batch_id: int) -> None:
         spark = batch.sparkSession
-        state = read_state(spark, state_dir)
+        base = store.latest_version()
+        state = store.read(spark, base, empty=STATE_SCHEMA)
         plan = plan_upserts(batch, state)
         # entity_id order BEFORE the sink: shape_created_state assigns
         # issue numbers by entity_id rank, so the rows must reach the
@@ -112,11 +99,12 @@ def stream_upserts(
                 state.agg(F.max("issue_number")).first()[0] or 0
             ) + 1
             applied = shape_created_state(creates, next_number)
-            # the parquet write materializes merged in one pass; the
-            # target is a NEW version dir, never the one `state` reads
-            # from, so the lazy read-then-write is safe
-            _commit_state(merge_state(state, applied), state_dir, batch_id)
+            store.commit(
+                merge_state(state, applied),
+                op="upsert-batch",
+                expected_version=base,
+            )
         finally:
             creates.unpersist()
 
-    return entities.writeStream.foreachBatch(process_batch)
+    return foreach_batch(entities, [store], checkpoint_dir, process_batch)

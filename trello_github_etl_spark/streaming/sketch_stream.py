@@ -11,11 +11,10 @@ a 100 TB/day token-frequency monitor actually runs.
 
 Replay caveat (and why the loop records batch ids): unlike the
 fingerprint MERGE, a SUM is NOT idempotent — re-adding a replayed
-batch would double-count it. The store's manifest carries the last
-applied batch id; a batch at or below it is skipped, which composes
-with foreachBatch's monotonically increasing batch ids to make
-at-least-once delivery exactly-once (the same gate rollup_stream
-uses).
+batch would double-count it. Each commit records its batch id
+(``store.last_batch()``); a batch at or below it is skipped, which
+composes with foreachBatch's monotonically increasing batch ids to
+make at-least-once delivery exactly-once.
 """
 
 from __future__ import annotations
@@ -29,6 +28,7 @@ from trello_github_etl_spark.operators.sketch import (
     merge_countmin,
 )
 from trello_github_etl_spark.plans.state_store import VersionedStateStore
+from trello_github_etl_spark.streaming import foreach_batch
 
 GRID_SCHEMA = StructType(
     [
@@ -40,29 +40,7 @@ GRID_SCHEMA = StructType(
 
 
 def read_grid(spark: SparkSession, store: VersionedStateStore) -> DataFrame:
-    if store.latest_version() == 0:
-        return spark.createDataFrame([], GRID_SCHEMA)
-    return store.read(spark)
-
-
-def last_applied_batch(store: VersionedStateStore) -> int:
-    # The gate lives in the manifest's top-level ``meta`` — published
-    # atomically with each commit and NOT rewritten by vacuum(), so the
-    # gate cannot regress when old history entries are pruned (the
-    # history-derived variant double-counted a replayed batch after a
-    # vacuum pruned the last cms-batch entry). History scan remains as
-    # the fallback for stores written before the meta field existed.
-    gate = store.get_meta("cms_last_batch")
-    if gate is not None:
-        return int(gate)
-    return max(
-        (
-            int(c.op.split(":", 1)[1])
-            for c in store.history()
-            if c.op.startswith("cms-batch:")
-        ),
-        default=-1,
-    )
+    return store.read(spark, empty=GRID_SCHEMA)
 
 
 def apply_batch(
@@ -73,17 +51,15 @@ def apply_batch(
     token_col: str = "token",
 ) -> bool:
     """Merge one micro-batch's grid into the state; returns False if
-    the batch id was already applied (replay → skipped).
-
-    OPERATIONAL CONSTRAINT (r4 code review): batch ids belong to the
-    streaming CHECKPOINT lineage — resetting the checkpoint while the
-    store survives restarts ids at 0 and this gate would silently
-    skip new batches up to the stored high-water mark. Store and
-    checkpoint must live and die together."""
-    if batch_id <= last_applied_batch(store):
-        return False
+    the batch id was already applied (replay → skipped). The gate
+    assumes the store lives and dies with the checkpoint
+    (``streaming.foreach_batch``)."""
+    # base BEFORE the gate: a commit landing between the two reads
+    # then fails the CAS instead of slipping past the gate
     base = store.latest_version()
-    current = read_grid(spark, store)
+    if batch_id <= store.last_batch():
+        return False
+    current = store.read(spark, base, empty=GRID_SCHEMA)
     batch_grid = countmin_table(batch, token_col).select(
         F.col("d").cast("long"), F.col("cell").cast("long"), "cnt"
     )
@@ -92,7 +68,7 @@ def apply_batch(
         merged,
         op=f"cms-batch:{batch_id}",
         expected_version=base,
-        meta={"cms_last_batch": batch_id},
+        batch_id=batch_id,
     )
     return True
 
@@ -104,17 +80,11 @@ def stream_sketch(
     token_col: str = "token",
 ):
     """foreachBatch wiring for a live token stream."""
-    # startup crash recovery — see stream_dedup's note /
-    # VersionedStateStore.recover_orphans
-    store.recover_orphans()
-
-    def handle(batch: DataFrame, batch_id: int) -> None:
-        apply_batch(
+    return foreach_batch(
+        stream,
+        [store],
+        checkpoint_dir,
+        lambda batch, batch_id: apply_batch(
             batch.sparkSession, store, batch, batch_id, token_col
-        )
-
-    return (
-        stream.writeStream.foreachBatch(handle)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
+        ),
     )
