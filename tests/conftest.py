@@ -1,11 +1,12 @@
 from __future__ import annotations
 
 import sys
+from pathlib import Path
 
 import duckdb
 import pytest
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 from trello_github_etl_spark.io import TABLES, table_path
 from trello_github_etl_spark.session import get_spark

@@ -78,9 +78,11 @@ def test_events_load_survives_vanilla_session():
     configured test session can't mask it)."""
     import subprocess
     import sys
+    from pathlib import Path
 
+    root = str(Path(__file__).resolve().parents[1])
     code = (
-        "import sys; sys.path.insert(0, '/root/repo')\n"
+        f"import sys; sys.path.insert(0, {root!r})\n"
         "from pyspark.sql import SparkSession\n"
         "from trello_github_etl_spark.io import load_table\n"
         "spark = SparkSession.builder.master('local[2]').getOrCreate()\n"

@@ -236,7 +236,7 @@ def test_connected_components_chain_and_islands(spark):
     )
     got = {
         r.doc_id: r.cluster_id
-        for r in dedup.connected_components(pairs).collect()
+        for r in dedup.connected_components_twostar(pairs).collect()
     }
     assert got == {1: 1, 2: 1, 3: 1, 10: 10, 11: 10, 20: 20, 21: 20}
 
@@ -826,10 +826,10 @@ def test_top_element_ratio_grouped_matches_hof(spark):
     assert set(grouped) == {1, 3, 4}
 
 
-def test_twostar_components_match_propagation(spark):
+def test_twostar_components_match_union_find(spark):
     """large-star/small-star must produce the identical
-    (node → component-min) labeling as min-label propagation on a
-    skewed graph mix: a path (worst case for diameter), a hub star
+    (node → component-min) labeling as the driver union-find (the
+    exact in-process reference) on a skewed graph mix: a path (worst case for diameter), a hub star
     (worst case for degree skew), a triangle, and isolated pairs —
     with edge directions deliberately scrambled."""
     from trello_github_etl_spark.operators import dedup
@@ -839,15 +839,15 @@ def test_twostar_components_match_propagation(spark):
     edges += [(300, 301), (301, 302), (302, 300)]  # triangle
     edges += [(501, 500), (600, 601)]
     pairs = spark.createDataFrame(edges, "doc_a long, doc_b long")
-    prop = {
+    ref = {
         r.doc_id: r.cluster_id
-        for r in dedup.connected_components(pairs).collect()
+        for r in dedup.connected_components_auto(pairs).collect()
     }
     star = {
         r.doc_id: r.cluster_id
         for r in dedup.connected_components_twostar(pairs).collect()
     }
-    assert star == prop
+    assert star == ref
     assert star[115] == 100
     assert star[229] == 200
     assert star[302] == 300
@@ -1013,25 +1013,6 @@ def test_twostar_raises_on_exhausted_iterations(spark):
     )
     with pytest.raises(RuntimeError, match="did not converge"):
         dedup.connected_components_twostar(pairs, max_iter=1)
-
-
-def test_min_label_raises_on_exhausted_iterations(spark):
-    """Min-label propagation must ALSO fail loudly when the round
-    budget is smaller than the graph's diameter — the r12 50x sweep
-    caught it returning partially-propagated labels silently (198k
-    wrong cluster ids) when a star-edge chain needed 38 rounds
-    against the old cap of 25. Two-star had this guard from r9;
-    the asymmetry was the bug."""
-    from trello_github_etl_spark.operators import dedup
-
-    pairs = spark.createDataFrame(
-        [(i, i + 1) for i in range(50)], "doc_a long, doc_b long"
-    )
-    with pytest.raises(RuntimeError, match="did not converge"):
-        dedup.connected_components(pairs, max_iter=3)
-    # and a budget >= diameter converges to the single chain class
-    labels = dedup.connected_components(pairs, max_iter=64).collect()
-    assert {r.cluster_id for r in labels} == {0}
 
 
 def test_real_codec_24bit_wav_is_loud_boundary(spark):
@@ -1221,10 +1202,10 @@ def test_semantic_dedup_recall_vs_brute_force(spark):
 
 
 def test_connected_components_reliable_checkpoint(spark, tmp_path):
-    """VERDICT r2 #5: with checkpoint_dir set, the iterative loops use
+    """VERDICT r2 #5: with checkpoint_dir set, the two-star loop uses
     a RELIABLE checkpoint (files in the shared dir — survives executor
-    loss on a cluster) instead of localCheckpoint, and produce the
-    identical labeling."""
+    loss on a cluster) instead of localCheckpoint, and produces the
+    union-find's labeling."""
     import os
 
     pairs = spark.createDataFrame(
@@ -1233,12 +1214,12 @@ def test_connected_components_reliable_checkpoint(spark, tmp_path):
     )
     expect = {
         r.doc_id: r.cluster_id
-        for r in dedup.connected_components(pairs).collect()
+        for r in dedup.connected_components_auto(pairs).collect()
     }
     ckpt = str(tmp_path / "ckpt")
     got = {
         r.doc_id: r.cluster_id
-        for r in dedup.connected_components(
+        for r in dedup.connected_components_twostar(
             pairs, checkpoint_dir=ckpt
         ).collect()
     }
@@ -1250,13 +1231,6 @@ def test_connected_components_reliable_checkpoint(spark, tmp_path):
         for f in fs
     ]
     assert files, "no reliable checkpoint files written"
-    got2 = {
-        r.doc_id: r.cluster_id
-        for r in dedup.connected_components_twostar(
-            pairs, checkpoint_dir=str(tmp_path / "ckpt2")
-        ).collect()
-    }
-    assert got2 == expect
 
 
 def test_bigram_novelty_semantics(spark, tmp_path):
@@ -1583,15 +1557,15 @@ def test_image_ahash_locality_and_exact_collision(spark):
 
 def test_components_auto_matches_iterative_on_both_paths(spark):
     """The small-graph union-find shortcut must produce byte-identical
-    labels to the iterative operator — exercised on BOTH sides of the
-    cutoff with the same graph."""
+    labels to the iterative two-star operator — exercised on BOTH
+    sides of the cutoff with the same graph."""
     pairs = spark.createDataFrame(
         [(1, 2), (2, 3), (10, 11), (21, 20), (5, 99), (99, 4)],
         "doc_a long, doc_b long",
     )
     expected = {
         r.doc_id: r.cluster_id
-        for r in dedup.connected_components(pairs).collect()
+        for r in dedup.connected_components_twostar(pairs).collect()
     }
     small = {
         r.doc_id: r.cluster_id
@@ -1602,6 +1576,23 @@ def test_components_auto_matches_iterative_on_both_paths(spark):
         for r in dedup.connected_components_auto(pairs, small_edges=0).collect()
     }
     assert small == expected == forced_iter
+
+
+def test_components_auto_large_graph_path_converges(spark):
+    """Above the union-find cutoff a long similarity chain must still
+    come back as one component: a shuffled 200-node path has
+    diameter 199, far past any O(diameter) round budget, and the
+    large-graph path must label it in O(log² n) rounds."""
+    import random
+
+    order = list(range(200))
+    random.Random(11).shuffle(order)
+    pairs = spark.createDataFrame(
+        list(zip(order, order[1:])), "doc_a long, doc_b long"
+    )
+    got = dedup.connected_components_auto(pairs, small_edges=0).collect()
+    assert len(got) == 200
+    assert {r.cluster_id for r in got} == {0}
 
 
 def test_zero_vector_never_outranks_real_neighbors(spark):
@@ -1999,13 +1990,13 @@ def test_lsh_star_edges_same_components(spark):
 
     via_pairs = {
         r.doc_id: r.cluster_id
-        for r in dedup.connected_components(
+        for r in dedup.connected_components_auto(
             dedup.minhash_lsh_pairs(corpus)
         ).collect()
     }
     via_star = {
         r.doc_id: r.cluster_id
-        for r in dedup.connected_components(
+        for r in dedup.connected_components_twostar(
             dedup.lsh_candidate_edges(corpus)
         ).collect()
     }
@@ -2484,13 +2475,3 @@ def test_t23_overflow_guard_fires(spark, tmp_path, monkeypatch):
     # and at the real bound the same corpus passes untouched
     monkeypatch.setattr(llm, "_T23_N_BOUND", 10**15)
     assert llm.t23_source_unigram_tvd(spark, d).count() == 1
-
-
-def test_connected_components_rejects_nonpositive_max_iter(spark):
-    """r12 ADVICE: max_iter <= 0 skips the loop body, leaving the
-    for-else's convergence check with an unbound `changed` — the
-    intended RuntimeError would surface as a NameError. Entry
-    validation fails loudly instead."""
-    pairs = spark.createDataFrame([(1, 2)], "doc_a long, doc_b long")
-    with pytest.raises(ValueError, match="max_iter"):
-        dedup.connected_components(pairs, max_iter=0)

@@ -195,8 +195,8 @@ def test_semantic_dedup_pair_join_is_cell_equi_join(spark):
         F.col("vec_id").alias("cent_id"), F.col("embedding").alias("c_vec")
     )
     # plan-shape check on the pair stage: build it directly (the full
-    # operator's connected_components is iterative, so its final plan
-    # reflects label joins, not the pairing)
+    # operator's components step is iterative above the union-find
+    # cutoff, so its final plan reflects label joins, not the pairing)
     cells = similarity.ivf_assign(emb, cents, 1)
     x, y = cells.alias("x"), cells.alias("y")
     pairs = x.join(

@@ -15,9 +15,11 @@ import importlib.util
 import json
 import subprocess
 import sys
+from pathlib import Path
 
+TOOL = str(Path(__file__).resolve().parents[1] / "tools/ref_secs_band.py")
 _spec = importlib.util.spec_from_file_location(
-    "ref_secs_band", "/root/repo/tools/ref_secs_band.py"
+    "ref_secs_band", TOOL
 )
 band = importlib.util.module_from_spec(_spec)
 _spec.loader.exec_module(band)
@@ -58,7 +60,7 @@ def test_cli_residual_math_and_parsed_unwrap(tmp_path):
         )
     )
     out = subprocess.run(
-        [sys.executable, "/root/repo/tools/ref_secs_band.py", str(pa), str(pb)],
+        [sys.executable, TOOL, str(pa), str(pb)],
         capture_output=True,
         text=True,
         check=True,
@@ -75,7 +77,7 @@ def test_cli_missing_ref_secs_is_nan_not_crash(tmp_path):
     pa.write_text(json.dumps({"queries": {"q": 1.0}}))
     pb.write_text(json.dumps({"queries": {"q": 2.0}}))
     out = subprocess.run(
-        [sys.executable, "/root/repo/tools/ref_secs_band.py", str(pa), str(pb)],
+        [sys.executable, TOOL, str(pa), str(pb)],
         capture_output=True,
         text=True,
         check=True,

@@ -10,7 +10,7 @@ its subprocess, and records per-query wall time + shuffle spill
 REST API) into PRESSURE_sf1.json. SCALE.md lesson 28 interprets the
 numbers.
 
-Usage: python tools/pressure_bench.py [--sf /root/repo/.data/sf1]
+Usage: python tools/pressure_bench.py [--sf <repo>/.data/sf1]
                                       [--out PRESSURE_sf1.json]
 """
 
@@ -88,7 +88,7 @@ print("CHILD_RESULT " + json.dumps({
 
 def main() -> int:
     ap = argparse.ArgumentParser()
-    ap.add_argument("--sf", default="/root/repo/.data/sf1")
+    ap.add_argument("--sf", default=os.path.join(REPO_ROOT, ".data", "sf1"))
     ap.add_argument("--out", default="PRESSURE_sf1.json")
     ap.add_argument("names", nargs="*")
     args = ap.parse_args()

@@ -16,10 +16,11 @@ import json
 import math
 import sys
 import time
+from pathlib import Path
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 from trello_github_etl_spark.io import TABLES, table_path  # noqa: E402
 from trello_github_etl_spark.session import get_spark  # noqa: E402

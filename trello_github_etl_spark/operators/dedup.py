@@ -764,113 +764,6 @@ def _truncate_lineage(
     return df.checkpoint(eager=True)
 
 
-def connected_components(
-    pairs: DataFrame,
-    src: str = "doc_a",
-    dst: str = "doc_b",
-    max_iter: int = 64,
-    checkpoint_dir: str | None = None,
-) -> DataFrame:
-    """(node, cluster_id=min reachable node) from an undirected edge
-    list — the consolidation step that turns near-dup PAIRS into
-    dedup GROUPS (keep cluster min, drop the rest).
-
-    Iterative min-label propagation: each round every node adopts the
-    smallest label among itself and its neighbors; converges in
-    O(diameter) rounds (near-dup clusters are small and dense, so
-    typically 2–4). Each round is one shuffle (join + min-agg); the
-    driver only checks a scalar convergence count — no data ever
-    collects. For graphs with giant components, swap in the
-    large-star/small-star algorithm (Kiveris et al.) — the round
-    structure below is the same.
-
-    NON-CONVERGENCE IS AN ERROR (r12 sf5 sweep finding): exhausting
-    ``max_iter`` with labels still changing means the returned frame
-    is NOT components — it's a partially-propagated mush, and
-    returning it silently produced 198k wrong cluster labels at the
-    50× corpus, where a star-edge chain's diameter (measured 38
-    rounds; sf1 fit inside the old cap of 25) crossed the cap.
-    The loop now raises instead; callers with unknown-diameter
-    graphs belong on connected_components_twostar (O(log² n) rounds
-    regardless of diameter — it passed the same 50× oracle the
-    capped loop failed).
-    """
-    if max_iter < 1:
-        # r12 ADVICE: with max_iter <= 0 the loop body never runs, so
-        # the for-else's RuntimeError would hit an unbound `changed`
-        # (NameError) — fail loudly at entry instead.
-        raise ValueError(f"max_iter must be >= 1, got {max_iter}")
-    e = pairs.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-    # cache the symmetrized edge list: every iteration joins against
-    # it, and without the cache each round would re-run the entire
-    # upstream pair-generation pipeline (e.g. MinHash-LSH)
-    edges = e.unionByName(
-        e.select(F.col("v").alias("u"), F.col("u").alias("v"))
-    ).cache()
-    # labels keeps a distinct column name ("node") so joins against
-    # edge endpoints are never ambiguous self-joins
-    labels = _truncate_lineage(
-        edges.select("u").distinct()
-        .select(F.col("u").alias("node"), F.col("u").alias("label")),
-        checkpoint_dir,
-    )
-
-    for _ in range(max_iter):
-        neighbor_min = (
-            edges.join(labels, edges["v"] == labels["node"], "inner")
-            .select(F.col("u").alias("nbr_node"), "label")
-            .groupBy("nbr_node")
-            .agg(F.min("label").alias("nmin"))
-        )
-        # one join carries both the updated label and the old one, so
-        # convergence is a single aggregate over the materialized
-        # frame — not a second labels⋈labels join per round.
-        # _truncate_lineage (vs cache) TRUNCATES LINEAGE each round:
-        # with cache alone the logical plan nests every prior round,
-        # so planning time grows per iteration and losing a cached
-        # partition recomputes from round 0. Checkpointed labels are
-        # one row per node — tiny next to the edge list. Pass
-        # ``checkpoint_dir`` on a real cluster for a RELIABLE
-        # checkpoint that survives executor loss mid-algorithm.
-        # eager=False (r15): the ``changed`` count right below is the
-        # frame's sole next consumer, so the truncation job fuses
-        # into the count — one job per round instead of two at the
-        # same dataflow (the count's filter sits ABOVE the LogicalRDD
-        # boundary, so the full frame still materializes).
-        joined = _truncate_lineage(
-            labels.join(
-                neighbor_min, labels["node"] == neighbor_min["nbr_node"], "left"
-            )
-            .select(
-                "node",
-                F.col("label").alias("old_label"),
-                F.least(
-                    F.col("label"), F.coalesce(F.col("nmin"), F.col("label"))
-                ).alias("label"),
-            ),
-            checkpoint_dir,
-            eager=False,
-        )
-        changed = joined.filter(F.col("label") != F.col("old_label")).count()
-        labels = joined.select("node", "label")
-        if changed == 0:
-            break
-    else:
-        edges.unpersist()
-        raise RuntimeError(
-            f"connected_components did not converge in {max_iter} rounds "
-            f"({changed} labels still changing): the graph's diameter "
-            "exceeds the round budget and the partial labels are NOT "
-            "components. Raise max_iter, or use "
-            "connected_components_twostar (O(log^2 n) rounds regardless "
-            "of diameter)."
-        )
-    edges.unpersist()  # final labels are checkpoint-backed above
-    return labels.select(
-        F.col("node").alias("doc_id"), F.col("label").alias("cluster_id")
-    )
-
-
 def connected_components_auto(
     pairs: DataFrame,
     src: str = "doc_a",
@@ -878,25 +771,27 @@ def connected_components_auto(
     small_edges: int = 100_000,
     checkpoint_dir: str | None = None,
 ) -> DataFrame:
-    """connected_components with an AQE-style small-graph shortcut:
-    materialize the edge list once, and if it is tiny, union-find on
-    the driver instead of paying the iterative fixpoint's per-round
-    job floor.
+    """(node, cluster_id=min reachable node) with an AQE-style
+    small-graph shortcut: materialize the edge list once, and if it
+    is tiny, union-find on the driver instead of paying the
+    distributed fixpoint's per-round job floor.
 
     Why: semantic dedup at a 0.92 threshold yields a few hundred
     edges from a 20k-vector corpus (measured at sf1: 400 edges), yet
-    the distributed min-label loop still costs ~5 s of pure
+    a distributed components loop still costs ~5 s of pure
     scheduling + per-round localCheckpoints on it.  A ≤100k-edge
     list is ≤ a few MB — the same KB-to-MB class as the broadcast
     centroid/prefix-sum catalogs — and driver union-find with
-    min-root gives the IDENTICAL (node, min-reachable-id) labels.
-    Above the cutoff the iterative operator runs unchanged, so the
-    100 TB path never collects; this is runtime size-based plan
-    choice, exactly AQE's move.  dd6 deliberately keeps the two-star
-    operator — it IS the giant-graph path."""
+    min-root gives the IDENTICAL (node, min-reachable-id) labels;
+    it is also the exact in-process reference the tests compare
+    the distributed operator against.  Above the cutoff the graph
+    goes to connected_components_twostar, so the 100 TB path never
+    collects and a long similarity chain still converges in
+    O(log² n) rounds; this is runtime size-based plan choice,
+    exactly AQE's move."""
     e = pairs.select(F.col(src).alias("u"), F.col(dst).alias("v"))
     # eager=False: the size-probe count right below materializes the
-    # edge list (and the collect / iterative fallback then reads the
+    # edge list (and the collect / two-star fallback then reads the
     # persisted blocks) — fuses the former pin job into the count
     e = _truncate_lineage(e, checkpoint_dir, eager=False)
     if e.count() <= small_edges:
@@ -932,7 +827,9 @@ def connected_components_auto(
             ]
         )
         return pairs.sparkSession.createDataFrame(out, schema)
-    return connected_components(e, "u", "v", checkpoint_dir=checkpoint_dir)
+    return connected_components_twostar(
+        e, "u", "v", checkpoint_dir=checkpoint_dir
+    )
 
 
 # Lineage-truncation cadence for the pagerank loop: every K rounds,
@@ -963,8 +860,7 @@ def pagerank(
     came from an edge), so there is no dangling-mass term.
 
     Scale shape: per round one join edges⋈ranks + one sum shuffle on
-    the destination — the components round structure with a value
-    aggregate instead of a min; lineage truncated per round
+    the destination; lineage truncated per round
     (localCheckpoint / reliable with ``checkpoint_dir``).
 
     Giant-family caveat (r7 skew stress): PageRank's VALUES depend on
@@ -1004,8 +900,8 @@ def pagerank(
     # an ExistingRDD loses size statistics (defaultSizeInBytes =
     # "huge"), which demoted every round's join to a full
     # two-sided shuffle — measured at sf0.1 the checkpoint variant
-    # ran rounds at 0.53 s vs 0.23 s for persist/old (A/B in
-    # OPTIMIZATION_r14.md §dd16); lineage is static (one join above
+    # ran rounds at 0.53 s vs 0.23 s for persist/old (r14 A/B);
+    # lineage is static (one join above
     # materialized inputs), so checkpoint's lineage-truncation role
     # is moot here. Contributions are unchanged bigint
     # `rank DIV deg`, so the trajectory is bit-identical.
@@ -1078,20 +974,18 @@ def connected_components_twostar(
 ) -> DataFrame:
     """(node, cluster_id=min reachable node) via alternating
     large-star/small-star rounds (Kiveris et al., "Connected
-    Components in MapReduce and Beyond", SoCC 2014) — the guarded
-    alternative to ``connected_components`` for corpora with GIANT
-    near-dup clusters.
+    Components in MapReduce and Beyond", SoCC 2014) — the one
+    distributed components operator; connected_components_auto
+    routes graphs above its driver union-find cutoff here.
 
-    Why two algorithms: min-label propagation needs O(diameter)
-    rounds and keeps the full edge list in every join, so a single
-    pathological component (boilerplate pages, templated spam) with
-    diameter in the hundreds stalls the job. Large-star/small-star
-    converges in O(log² n) rounds regardless of diameter AND
-    monotonically shrinks/flattens the edge set toward stars, so the
-    per-round shuffle gets cheaper as it goes. Trade-off: each round
-    is two shuffle stages instead of one, so for the common
-    small-dense-cluster regime the simple propagation wins — keep it
-    the default, switch here when cluster shapes degrade.
+    Why this algorithm: it converges in O(log² n) rounds regardless
+    of diameter, so a pathological component (boilerplate pages,
+    templated spam, a long similarity chain) cannot stall the job
+    the way an O(diameter) min-label loop does, AND it monotonically
+    shrinks/flattens the edge set toward stars, so the per-round
+    shuffle gets cheaper as it goes. Against a min-label loop on
+    150k-edge graphs it ran ~7x faster on 20–60-node chains and on
+    par on 2–12-node near-cliques, the semantic-dedup shape.
 
     Round structure (all DataFrame ops, nothing collects):
     - large-star: symmetrize, per-node min m over Γ(u)∪{u}, emit
@@ -1100,13 +994,13 @@ def connected_components_twostar(
     - small-star: on the big→small edges, per-node min m of N(u)∪{u},
       re-hang u and its non-min neighbors on m.
     Convergence = fixed edge set, checked with a (count,
-    sum(xxhash64)) signature — one scalar aggregate per round, same
-    driver-side-only contract as the sibling algorithm;
-    ``localCheckpoint`` truncates per-round lineage.
+    sum(xxhash64)) signature — one scalar aggregate per round, and
+    only that scalar reaches the driver; ``localCheckpoint``
+    truncates per-round lineage.
 
     r14 round-body surgery (guide §2.4, measured 2.76 s → 2.14 s
     median on the real sf0.1 dd6 edge set, 6 → 3 Exchanges/round,
-    labels bit-identical — tools/twostar_probe.py):
+    labels bit-identical; r14 A/B):
     - large-star attaches the per-node min via a window over
       ``partitionBy(u)`` instead of groupBy+join-back: one exchange
       instead of two, no join. The window buffers one node's
@@ -1114,28 +1008,19 @@ def connected_components_twostar(
       ExternalAppendOnlyUnsafeRowArray) — the Spark analogue of the
       secondary-sort streaming reduce the MR formulation uses; a
       10k-member hub group is ~160 KB, graceful far beyond that.
-    - small-star is ONE ``groupBy(u).agg(min, collect_set)`` whose
-      exploded output emits both the re-hung neighbors and the self
-      row — fusing the old intermediate ``distinct`` + smins groupBy
-      + hang join (3 exchanges) into one aggregation. The
-      collect_set holds each node's DISTINCT big→small targets,
-      i.e. group-mins of the groups it belongs to. Buffer bound
-      (r14 ADVICE, scoped correctly): for LSH-derived edges
-      (dup_clusters) that is the per-doc band count
-      (measured max 2 at sf0.1 round 1; a star hub's members each
-      hold exactly {hub}); for ARBITRARY edge inputs this is a
-      public general-graph operator and the set is bounded only by
-      node degree (distinct big→small min targets) — the same order
-      as the per-node window buffer the large-star step already
-      accepts, though the window spills and a single agg-set buffer
-      does not; a degree-skewed general graph should budget memory
-      for its max-degree node here.
+    - small-star attaches its per-node min with the same window,
+      and one explode per row emits the re-hung neighbor and the
+      self edge; the round's ``distinct`` drops the repeats. A
+      window, not ``groupBy(u).agg(min, collect_set)``: that
+      object-hash aggregate falls back to sort-based past 128 keys
+      anyway and its set buffer does not spill, and on 150k-edge
+      graphs the window form ran 3.40 s vs 4.36 s median
+      (near-cliques) and 13.0 s vs 15.8 s (chains), same labels.
     """
     raw = pairs.select(F.col(src).alias("u"), F.col(dst).alias("v"))
     # node coverage from the UNFILTERED pairs: a node appearing only
     # in self-pairs must still come back as its own singleton cluster,
-    # exactly as connected_components does — the two operators are
-    # documented drop-ins for each other (r4 code review)
+    # exactly as the driver union-find labels it (r4 code review)
     # eager=False (r15): all_nodes' sole consumer is the FINAL label
     # join, so its materialization job folds into the consumer's
     # action; the initial edge frame folds into round 1's signature
@@ -1187,30 +1072,22 @@ def connected_components_twostar(
                 F.least(F.col("_mn"), F.col("u")).alias("v"),
             )
         )
-        # small-star input is big→small by construction of large;
-        # one aggregation yields the distinct neighbor set AND its
-        # min, and one explode emits every re-hung edge plus the
-        # self edge (u, m)
-        star = large.groupBy("u").agg(
-            F.min("v").alias("m"), F.collect_set("v").alias("vs")
-        )
-        hang = star.select(
-            F.explode(
-                F.concat(
-                    F.transform(
-                        F.filter("vs", lambda x: x != F.col("m")),
-                        lambda x: F.struct(
-                            x.alias("u"), F.col("m").alias("v")
-                        ),
-                    ),
+        # small-star input is big→small by construction of large, so
+        # m = min(N(u)); each row (u, v) re-hangs v on m (dropped when
+        # v IS m) and emits the self edge (u, m)
+        hang = (
+            large.withColumn("_m", F.min("v").over(win))
+            .select(
+                F.explode(
                     F.array(
-                        F.struct(
-                            F.col("u").alias("u"), F.col("m").alias("v")
-                        )
-                    ),
-                )
-            ).alias("e")
-        ).select("e.u", "e.v")
+                        F.struct(F.col("v").alias("u"), F.col("_m").alias("v")),
+                        F.struct(F.col("u").alias("u"), F.col("_m").alias("v")),
+                    )
+                ).alias("e")
+            )
+            .select("e.u", "e.v")
+            .filter(F.col("u") != F.col("v"))
+        )
         # eager=False: the signature collect right below materializes
         # the round's edge set — one job per round instead of two
         edges = _truncate_lineage(hang.distinct(), checkpoint_dir, eager=False)
@@ -1223,8 +1100,7 @@ def connected_components_twostar(
     if not converged:
         # a non-star residual edge set would fan out the label join
         # below into duplicated, inconsistent rows per node — fail
-        # loudly instead (the sibling algorithm degrades to one
-        # stale label per node on bailout; this one cannot)
+        # loudly instead
         raise RuntimeError(
             f"two-star components did not converge in {max_iter} rounds"
             " — raise max_iter (rounds needed are O(log^2 n))"
@@ -1260,9 +1136,9 @@ def dup_clusters(
     regardless of diameter AND a monotonically shrinking edge set per
     round, where min-label propagation joins the FULL edge list for
     O(diameter) rounds (the r12 38-round failure class). Labels are
-    node-for-node identical to connected_components' (the
+    node-for-node identical to the driver union-find's (the
     min-reachable fixpoint is unique;
-    test_twostar_components_match_propagation)."""
+    test_twostar_components_match_union_find)."""
     return connected_components_twostar(
         lsh_candidate_edges(docs, text_col), checkpoint_dir=checkpoint_dir
     )
@@ -1573,8 +1449,9 @@ def semantic_dedup(
       candidates are within-cluster only — O(Σ|cell|²), never the
       O(n²) corpus cross product, and cells are capacity-bounded by
       the k-means balance (skew lever: raise k);
-    - grouping reuses connected_components (per-round shuffle on the
-      candidate graph only — pairs, not vectors);
+    - grouping is connected_components_auto (driver union-find up
+      to 100k edges, two-star above; either way the candidate graph
+      only — pairs, not vectors);
     - cosine uses the strict-fold double contract (similarity.dot),
       so a DuckDB oracle reproduces every score bit-for-bit.
 
