@@ -2,9 +2,10 @@
 multiset must be EXACTLY the plain cell-equi-join's — blocking only
 re-partitions the pair enumeration (each unordered pair matches on
 exactly one ordered block combination), it never adds, drops, or
-rescores a candidate. Asserted bit-exact (cos doubles included), plus
-the plumbing through semantic_dedup / mutual_knn_graph and the plan
-shape (explicit AQE-exempt exchange, no cartesian product).
+rescores a candidate. Asserted bit-exact (cos doubles included), on
+cell_join itself for every join shape the operators build, plus the
+plumbing through semantic_dedup and the plan shape (explicit
+AQE-exempt exchange, no cartesian product).
 SCALE.md lesson 37.
 """
 
@@ -79,13 +80,87 @@ def test_semantic_dedup_pair_blocks_identical(spark):
     assert auto_blocked == auto_plain
 
 
-def test_mutual_knn_pair_blocks_identical(spark):
-    emb = _emb(spark)
-    plain = sorted(similarity.mutual_knn_graph(emb, k=3).collect())
-    blocked = sorted(
-        similarity.mutual_knn_graph(emb, k=3, pair_blocks=2).collect()
+def _label_cells(spark):
+    emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet").select(
+        "vec_id", "embedding", "label"
     )
-    assert blocked == plain
+    cents, _, _ = similarity.auto_seed_centroids(emb, nlist=4)
+    return similarity.ivf_assign(emb, cents, 1, extra_cols=("label",))
+
+
+def _self_join(cells, blocks):
+    # cell_pairs' / mutual_knn_graph's shape: id inequality
+    return similarity.cell_join(
+        cells, cells, "vec_id", "vec_id", blocks,
+        F.col("x.vec_id") < F.col("y.vec_id"),
+    ).select("x.vec_id", "y.vec_id")
+
+
+def _self_label_join(cells, blocks):
+    # hard_negative_mining's shape: id AND label inequality
+    return similarity.cell_join(
+        cells, cells, "vec_id", "vec_id", blocks,
+        (F.col("x.vec_id") < F.col("y.vec_id"))
+        & (F.col("x.label") != F.col("y.label")),
+    ).select("x.vec_id", "y.vec_id", "x.label", "y.label")
+
+
+def _cross_label_join(cells, blocks):
+    # margin_alignment's / the state probe's cross-side shape, with
+    # the label predicate ANDed on
+    xs = cells.filter(F.col("vec_id") % 2 == 0)
+    ys = cells.filter(F.col("vec_id") % 2 == 1).select(
+        "cell",
+        F.col("vec_id").alias("_y_id"),
+        F.col("label").alias("_y_label"),
+    )
+    return similarity.cell_join(
+        xs, ys, "vec_id", "_y_id", blocks,
+        F.col("x.label") != F.col("y._y_label"),
+    ).select("vec_id", "_y_id", "label", "_y_label")
+
+
+@pytest.mark.parametrize(
+    "join",
+    [_self_join, _self_label_join, _cross_label_join],
+    ids=["self", "self-label", "cross-label"],
+)
+def test_cell_join_blocked_identity(spark, join):
+    """cell_join's block salting is purely a physical re-plan: B=4
+    yields exactly the B=1 (plain cell equi-join) row multiset, with
+    the caller's predicates still applied inside the join."""
+    cells = _label_cells(spark)
+    plain = sorted(map(tuple, join(cells, 1).collect()))
+    assert plain  # the fixture produces candidates on every shape
+    assert sorted(map(tuple, join(cells, 4).collect())) == plain
+
+
+def test_ivf_cell_operators_take_one_cell_argument():
+    """Each IVF-cell operator takes ONE cell argument (a table or a
+    named policy) and derives assignment, block salting and the
+    repartition from it: no two_level, no nlist beside centroids, no
+    centroid count, and pair_blocks only where dd26 sets it."""
+    import inspect
+
+    ops = {
+        "semantic_dedup": dedup.semantic_dedup,
+        "incremental_semantic_dedup": dedup.incremental_semantic_dedup,
+        "mutual_knn_graph": similarity.mutual_knn_graph,
+        "margin_alignment": similarity.margin_alignment,
+        "hard_negative_mining": similarity.hard_negative_mining,
+    }
+    settable = 0
+    for name, fn in ops.items():
+        params = set(inspect.signature(fn).parameters)
+        assert "two_level" not in params, name
+        assert "nlist" not in params, name
+        assert "centroids" in params, name
+        assert ("pair_blocks" in params) == (name == "semantic_dedup"), name
+        knobs = {"centroids", "pair_blocks"}
+        if name == "incremental_semantic_dedup":
+            assert "k" not in params
+        settable += len(params & knobs)
+    assert settable == 6
 
 
 def test_blocked_plan_shape(spark):

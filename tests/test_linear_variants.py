@@ -1,12 +1,11 @@
 """Linear-occupancy ANN mining quartet (VERDICT r11 #1): s18/s19/s20/
 dd35 — constant-expected-cell-size nlist (similarity.linear_nlist),
-two-level assignment (ivf_assign_2level), and blocked_cell_sides
-salting.
+two-level assignment (ivf_assign_2level), and cell_join block
+salting, all derived from the one ``linear_nlist`` cell argument.
+(Block salting's pair-multiset identity is asserted on cell_join
+itself in tests/test_cell_blocks.py.)
 
-Two claim families:
-- BLOCKED IDENTITY: pair_blocks > 1 is a purely physical re-plan —
-  bit-identical output frames (the blocked_cell_sides invariant:
-  every pair matches exactly one replica combination).
+Claim family:
 - RECALL DOMINANCE: at fixture scale the linear policy's recall vs
   the brute-force ground truth is no worse than the √N policy's
   (cells are the SAME SIZE OR LARGER below the N = target² crossover
@@ -88,81 +87,8 @@ def test_two_level_assignment_shape_and_occupancy(spark):
     assert cells.columns == ["vec_id", "cell", "embedding", "_norm"]
 
 
-def test_two_level_requires_self_seeding(spark):
+def _incr_lin(spark):
     emb = _emb(spark, SF001)
-    cents, _s, k = sim.auto_seed_centroids(emb, sim.linear_nlist)
-    with pytest.raises(ValueError):
-        sim.mutual_knn_graph(emb, centroids=cents, two_level=True)
-    with pytest.raises(ValueError):
-        sim.margin_alignment(emb, emb, centroids=cents, two_level=True)
-    with pytest.raises(ValueError):
-        sim.hard_negative_mining(
-            _emb(spark, SF001, ("vec_id", "embedding", "label")),
-            centroids=cents,
-            two_level=True,
-        )
-    with pytest.raises(ValueError):
-        # incremental path needs the centroid count for the √k split
-        dedup.incremental_semantic_dedup(
-            emb, emb, cents, two_level=True, k=None
-        )
-
-
-# ---------------------------------------------------------------------------
-# blocked identity (the blocked_cell_sides invariant, per operator)
-# ---------------------------------------------------------------------------
-
-
-def _knn_lin(spark, blocks):
-    return sim.mutual_knn_graph(
-        _emb(spark, SF001),
-        k=3,
-        nlist=sim.linear_nlist,
-        two_level=True,
-        pair_blocks=blocks,
-        cache_key="tlv-knn|sf0.001",
-    )
-
-
-def test_mutual_knn_blocked_identity(spark):
-    assert _rows(_knn_lin(spark, 1)) == _rows(_knn_lin(spark, 4))
-
-
-def _margin_lin(spark, blocks):
-    emb = _emb(spark, SF001)
-    return sim.margin_alignment(
-        emb.filter(F.col("vec_id") % 2 == 0),
-        emb.filter(F.col("vec_id") % 2 == 1),
-        k=4,
-        nlist=sim.linear_nlist,
-        two_level=True,
-        pair_blocks=blocks,
-        cache_key="tlv-margin|sf0.001",
-    )
-
-
-def test_margin_blocked_identity(spark):
-    assert _rows(_margin_lin(spark, 1)) == _rows(_margin_lin(spark, 4))
-
-
-def _hardneg_lin(spark, blocks):
-    return sim.hard_negative_mining(
-        _emb(spark, SF001, ("vec_id", "embedding", "label")),
-        k=3,
-        nlist=sim.linear_nlist,
-        two_level=True,
-        pair_blocks=blocks,
-        cache_key="tlv-hneg|sf0.001",
-    )
-
-
-def test_hard_negatives_blocked_identity(spark):
-    assert _rows(_hardneg_lin(spark, 1)) == _rows(_hardneg_lin(spark, 4))
-
-
-def _incr_lin(spark, blocks):
-    emb = _emb(spark, SF001)
-    cents, suffix, k = sim.auto_seed_centroids(emb, sim.linear_nlist)
     v = F.col("vec_id")
     batch = emb.filter(v % 5 == 0).select(
         (v + 100000).alias("vec_id"), "embedding"
@@ -175,21 +101,16 @@ def _incr_lin(spark, blocks):
     return dedup.incremental_semantic_dedup(
         batch,
         emb,
-        cents,
+        sim.linear_nlist,
         threshold=0.9,
-        cache_key=f"tlv-incr|sf0.001{suffix}",
-        pair_blocks=blocks,
-        two_level=True,
-        k=k,
+        cache_key="tlv-incr|sf0.001",
     )
 
 
-def test_incremental_semdedup_blocked_identity(spark):
-    r1, r4 = _rows(_incr_lin(spark, 1)), _rows(_incr_lin(spark, 4))
-    assert r1 == r4
+def test_incremental_semdedup_linear_exact_dups_hit_state(spark):
     # the re-embedded exact dups must hit the state through the
     # two-level cells (identical vectors share supers AND seeds)
-    verdicts = {t[0]: t[2] for t in r1}
+    verdicts = {t[0]: t[2] for t in _rows(_incr_lin(spark))}
     assert all(
         verdicts[i] == "dup_of_state" for i in verdicts if i >= 100000
     )
@@ -233,18 +154,13 @@ def test_mutual_knn_linear_recall_dominates(spark, emb01):
     e_sqrt = {
         (r["vec_a"], r["vec_b"])
         for r in sim.mutual_knn_graph(
-            emb, k=3, cache_key="tlv-r15|sf0.01"
+            emb, sim.auto_nlist, k=3, cache_key="tlv-r15|sf0.01"
         ).collect()
     }
     e_lin = {
         (r["vec_a"], r["vec_b"])
         for r in sim.mutual_knn_graph(
-            emb,
-            k=3,
-            nlist=sim.linear_nlist,
-            two_level=True,
-            pair_blocks=4,
-            cache_key="tlv-r18|sf0.01",
+            emb, sim.linear_nlist, k=3, cache_key="tlv-r18|sf0.01"
         ).collect()
     }
     rec_sqrt = len(e_sqrt & truth) / len(truth)
@@ -267,18 +183,13 @@ def test_hard_negatives_linear_recall_dominates(spark, emb01):
     p_sqrt = {
         (r["anchor_id"], r["neg_id"])
         for r in sim.hard_negative_mining(
-            embl, k=k, cache_key="tlv-r17|sf0.01"
+            embl, sim.auto_nlist, k=k, cache_key="tlv-r17|sf0.01"
         ).collect()
     }
     p_lin = {
         (r["anchor_id"], r["neg_id"])
         for r in sim.hard_negative_mining(
-            embl,
-            k=k,
-            nlist=sim.linear_nlist,
-            two_level=True,
-            pair_blocks=4,
-            cache_key="tlv-r20|sf0.01",
+            embl, sim.linear_nlist, k=k, cache_key="tlv-r20|sf0.01"
         ).collect()
     }
     rec_sqrt = len(p_sqrt & truth) / len(truth)
@@ -309,19 +220,13 @@ def test_margin_linear_recall_dominates(spark, emb01):
     best_sqrt = {
         r["x_id"]: r["y_id"]
         for r in sim.margin_alignment(
-            sx, sy, k=k, cache_key="tlv-r16|sf0.01"
+            sx, sy, sim.auto_nlist, k=k, cache_key="tlv-r16|sf0.01"
         ).collect()
     }
     best_lin = {
         r["x_id"]: r["y_id"]
         for r in sim.margin_alignment(
-            sx,
-            sy,
-            k=k,
-            nlist=sim.linear_nlist,
-            two_level=True,
-            pair_blocks=4,
-            cache_key="tlv-r19|sf0.01",
+            sx, sy, sim.linear_nlist, k=k, cache_key="tlv-r19|sf0.01"
         ).collect()
     }
     agree_sqrt = sum(best_sqrt.get(x) == truth[x] for x in xs) / len(xs)

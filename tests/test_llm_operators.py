@@ -1595,6 +1595,22 @@ def test_components_auto_large_graph_path_converges(spark):
     assert {r.cluster_id for r in got} == {0}
 
 
+def test_components_auto_small_path_releases_edge_pin(spark):
+    """The union-find result is built on the driver and never reads
+    the edge list again, so the small-graph path must leave no RDD
+    registered behind it."""
+    jsc = spark.sparkContext._jsc
+    pairs = spark.createDataFrame(
+        [(1, 2), (2, 3), (7, 8)], "doc_a long, doc_b long"
+    )
+    before = jsc.getPersistentRDDs().size()
+    got = dedup.connected_components_auto(pairs).collect()
+    assert {(r.doc_id, r.cluster_id) for r in got} == {
+        (1, 1), (2, 1), (3, 1), (7, 7), (8, 7)
+    }
+    assert jsc.getPersistentRDDs().size() == before
+
+
 def test_zero_vector_never_outranks_real_neighbors(spark):
     """Cosine with the zero vector is DEFINED as 0.0 (not NaN, which
     Spark ranks above everything): a zero target must sort below any

@@ -639,3 +639,6 @@ def test_board_customize_has_no_cross_join_and_parses_bounty_once(spark):
     # the amount's regexp_extract (group 1) and the first-match split
     assert plan.count(f"{text.BOUNTY_RE}, 1)") == 1
     assert plan.count(text.BOUNTY_RE) == 2
+    # task_type's first-match strip is one limit-2 split, not an
+    # extract + instr + substring splice repeating the pattern
+    assert plan.count(r"\s*Tasks?\s*") == 1

@@ -1,7 +1,7 @@
-"""The self-seeding (centroids=None) path of semantic_dedup and
+"""The self-seeding cell policies of semantic_dedup and
 mutual_knn_graph — VERDICT r5 #1 / r6 #1: the √N clamp, the
-auto==explicit equivalence, the contradictory-argument guards, and
-the dense-renumber fix that lets non-integer id columns through
+auto==explicit equivalence, the cell-argument guard, and the
+dense-renumber fix that lets non-integer id columns through
 ivf_assign's int(cent_id) literal inlining.
 """
 
@@ -45,17 +45,12 @@ def test_auto_seed_validations(spark):
     emb = _emb(spark)
     with pytest.raises(ValueError, match="nlist must be >= 1"):
         similarity.auto_seed_centroids(emb, nlist=0)
-    with pytest.raises(ValueError, match="nlist must be >= 1"):
-        dedup.semantic_dedup(emb, nlist=-3)
-    cents = emb.limit(4).select(
-        F.col("vec_id").alias("cent_id"), F.col("embedding").alias("c_vec")
-    )
-    # nlist alongside explicit centroids is a contradiction, not a
-    # silent ignore (r6 advice)
-    with pytest.raises(ValueError, match="not both"):
-        dedup.semantic_dedup(emb, cents, nlist=8)
-    with pytest.raises(ValueError, match="not both"):
-        similarity.mutual_knn_graph(emb, cents, nlist=8)
+    # the cell argument is a table or one of the two named policies;
+    # any other cell-count callable is refused, not silently run flat
+    with pytest.raises(ValueError, match="auto_nlist or linear_nlist"):
+        dedup.semantic_dedup(emb, lambda n: 8)
+    with pytest.raises(ValueError, match="auto_nlist or linear_nlist"):
+        similarity.mutual_knn_graph(emb, lambda n: 8)
 
 
 def test_auto_seed_suffix_folds_k_and_n(spark):
@@ -104,15 +99,14 @@ def test_semantic_dedup_auto_equals_explicit(spark):
 
 
 def test_mutual_knn_auto_equals_explicit(spark):
-    """The √N OPT-IN path (nlist=auto_nlist — the pre-r13 default)
-    must equal the same structure passed as explicit centroids; and
-    the r13 DEFAULT (linear bundle) must equal its own explicit
-    spelling (nlist=linear_nlist + two_level + pair_blocks)."""
+    """The √N policy (centroids=auto_nlist) must equal the same
+    structure passed as explicit centroids; and the default must be
+    the linear policy (centroids=linear_nlist)."""
     emb = _emb(spark)
     cents, _, _ = similarity.auto_seed_centroids(emb)
     sqrt_tier = sorted(
         similarity.mutual_knn_graph(
-            emb, k=3, nlist=similarity.auto_nlist
+            emb, similarity.auto_nlist, k=3
         ).collect()
     )
     explicit = sorted(similarity.mutual_knn_graph(emb, cents, k=3).collect())
@@ -121,11 +115,7 @@ def test_mutual_knn_auto_equals_explicit(spark):
     default = sorted(similarity.mutual_knn_graph(emb, k=3).collect())
     linear_explicit = sorted(
         similarity.mutual_knn_graph(
-            emb,
-            k=3,
-            nlist=similarity.linear_nlist,
-            two_level=True,
-            pair_blocks=similarity.LINEAR_PAIR_BLOCKS,
+            emb, similarity.linear_nlist, k=3
         ).collect()
     )
     assert default == linear_explicit
@@ -139,7 +129,8 @@ def test_auto_path_accepts_string_ids(spark):
     emb = _emb(spark).withColumn(
         "sid", F.format_string("doc-%04d", F.col("vec_id"))
     ).select("sid", "embedding")
-    out = dedup.semantic_dedup(emb, id_col="sid", nlist=4)
+    cents, _, _ = similarity.auto_seed_centroids(emb, 4, "embedding", "sid")
+    out = dedup.semantic_dedup(emb, cents, id_col="sid")
     rows = out.collect()
     assert len(rows) == emb.count()
     # string ids survive into the id and group columns; cells dense

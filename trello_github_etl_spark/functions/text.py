@@ -7,7 +7,7 @@ they stay inside whole-stage codegen — no Python in the hot path.
 Fidelity notes (quirks reproduced on purpose, pinned by golden tests):
 - JS ``String.replace(regex-without-/g)`` replaces only the FIRST
   match; Spark's ``regexp_replace`` is global. ``replace_first``
-  reproduces first-only semantics via extract + splice.
+  reproduces first-only semantics with a limit-2 ``split``.
 - The title splitter (`lib/transform.js:43–60`) leaves a trailing
   space on titles that never overflow 50 chars, and emits ``" "`` for
   an empty name. Reproduced exactly.
@@ -28,27 +28,14 @@ INDEX_RE = r"^\s*(\d+\))\s+"
 TITLE_MAX = 50  # lib/transform.js:52
 
 
-def _suffix(col: Column, start_pos: Column) -> Column:
-    """Substring from ``start_pos`` to end (PySpark substring needs a len)."""
-    return F.substring(col, start_pos, F.length(col))
-
-
 def replace_first(col: Column, pattern: str) -> Column:
     """Remove the FIRST regex match from ``col`` (JS non-global replace).
 
-    Finds the matched text with ``regexp_extract(…, 0)`` and splices it
-    out at its first literal position. An earlier identical literal
-    would itself be an earlier regex match, so first-literal ==
-    first-regex-match.
+    ``split`` with limit 2 cuts at the first match only; joining the
+    two halves with "" splices that match out, and the pattern appears
+    in the plan once.
     """
-    matched = F.regexp_extract(col, pattern, 0)
-    pos = F.instr(col, matched)
-    return F.when(matched == "", col).otherwise(
-        F.concat(
-            F.substring(col, F.lit(1).cast("int"), (pos - 1).cast("int")),
-            _suffix(col, (pos + F.length(matched)).cast("int")),
-        )
-    )
+    return F.array_join(F.split(col, pattern, 2), "")
 
 
 def extract_bounty_amount(name: Column) -> Column:

@@ -19,11 +19,21 @@ Scale design:
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from trello_github_etl_spark.operators.gen import exploded, pos_exploded
 from trello_github_etl_spark.operators.parallel import ensure_parallelism
+from trello_github_etl_spark.operators.similarity import (
+    _ivf_cells,
+    auto_nlist,
+    cell_join,
+    cell_pairs,
+    cosine_prenormed,
+    linear_nlist,
+)
 from trello_github_etl_spark.operators.textstats import (
     fingerprint,
     ngrams,
@@ -789,11 +799,14 @@ def connected_components_auto(
     collects and a long similarity chain still converges in
     O(log² n) rounds; this is runtime size-based plan choice,
     exactly AQE's move."""
-    e = pairs.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-    # eager=False: the size-probe count right below materializes the
-    # edge list (and the collect / two-star fallback then reads the
-    # persisted blocks) — fuses the former pin job into the count
-    e = _truncate_lineage(e, checkpoint_dir, eager=False)
+    # persist, not localCheckpoint: the size-probe count right below
+    # materializes the edge list and the collect / two-star fallback
+    # read the cached blocks, but only a persist can be released —
+    # DataFrame.unpersist() leaves a localCheckpoint's RDD registered
+    # for the rest of the session. The two-star path keeps the pin:
+    # its lazily checkpointed all_nodes frame reads the edges again
+    # after it returns.
+    e = pairs.select(F.col(src).alias("u"), F.col(dst).alias("v")).persist()
     if e.count() <= small_edges:
         parent: dict = {}
 
@@ -805,7 +818,11 @@ def connected_components_auto(
                 parent[x], x = root, parent[x]
             return root
 
-        rows = e.collect()
+        try:
+            rows = e.collect()
+        finally:
+            # the driver-built result below never reads the edges again
+            e.unpersist()
         for r in rows:
             ru, rv = find(r.u), find(r.v)
             if ru != rv:
@@ -1414,21 +1431,18 @@ def semantic_dedup_nlist(n: int) -> int:
     nlist≈√N rule, measured as THE SemDeDup scale lever in SCALE.md
     lessons 25/26). One definition shared with the mutual-kNN graph
     so the two cell-equi-join operators cannot drift apart."""
-    from trello_github_etl_spark.operators.similarity import auto_nlist
-
     return auto_nlist(n)
 
 
 def semantic_dedup(
     embeddings: DataFrame,
-    centroids: DataFrame | None = None,
+    centroids: "DataFrame | Callable[[int], int]" = auto_nlist,
     threshold: float = 0.92,
     vec_col: str = "embedding",
     id_col: str = "vec_id",
     cache_key: str | None = None,
     checkpoint_dir: str | None = None,
-    nlist: int | None = None,
-    pair_blocks: int = 1,
+    pair_blocks: int | None = None,
 ) -> DataFrame:
     """SemDeDup-style semantic deduplication over an embedding column
     (Abbas et al. 2023, arXiv:2303.09540): coarse-cluster the corpus,
@@ -1461,61 +1475,37 @@ def semantic_dedup(
     is 1.0 by construction; raise recall on borderline pairs with
     more Lloyd rounds on the centroids (s9) or a secondary probe.
 
-    Cell-count policy (VERDICT r5 #1 / r6 #1): when ``centroids`` is
-    None the operator SELF-SEEDS via similarity.auto_seed_centroids —
-    one corpus count picks ``nlist = semantic_dedup_nlist(N)`` (√N
-    clamped; override with an explicit ``nlist``) and the ``nlist``
-    lowest-``id_col`` vectors become the seeds (deterministic, oracle
-    replayable with ROW_NUMBER), re-numbered to dense cent_ids 0..k-1
-    so non-integer ``id_col`` corpora work too (r6 advice). The
-    returned ``cell`` values on this path are therefore dense seed
+    ``centroids`` is the cell argument (see similarity._ivf_cells):
+    a frozen (cent_id, c_vec) table (s9's trained k-means, the
+    dd14/dd15 receipts), ``auto_nlist`` (the default: one corpus
+    count picks ⌈√N⌉ clamped cells and the lowest-``id_col`` vectors
+    become the seeds, re-numbered to dense cent_ids 0..k-1 so
+    non-integer ``id_col`` corpora work too) or ``linear_nlist``.
+    The returned ``cell`` values on a self-seeded path are dense seed
     RANKS, not raw seed ids. A static cell count is the first plan to
     die at 100×: per-cell population grows linearly with the corpus
     and pair work quadratically per cell, which is exactly dd14's old
-    10.4× sf0.1→sf1 ratio under nlist=16. Callers with trained
-    centroids (s9 k-means) still pass them explicitly — ``nlist``
-    alongside explicit centroids raises, and the auto cache-key
-    suffix folds in both k and N so same-k corpora sharing a base key
-    cannot serve each other stale seeds.
+    10.4× sf0.1→sf1 ratio under nlist=16.
 
-    ``pair_blocks`` (default 1) forwards to similarity.cell_pairs'
-    giant-cell skew lever: B>1 spreads one cell's O(c²) cosine work
-    over B² tasks with an IDENTICAL pair multiset (so the oracle and
-    the returned frame are bit-unchanged — it is purely a physical
-    re-plan). Use it when the corpus is dup-heavy (near-identical
-    vectors share an argmax, so real dup clusters concentrate in few
-    cells) or when #cells < cores pins the pair stage below machine
-    parallelism (dd14's static-16 receipt). On the auto path B>1
-    replaces the per-cell repartition (the blocked join carries its
-    own pinned (cell, blk, partner) exchange).
+    ``pair_blocks`` (default: the policy's block count — 1 unless
+    ``linear_nlist``) is similarity.cell_join's giant-cell skew
+    lever: B>1 spreads one cell's O(c²) cosine work over B² tasks
+    with an IDENTICAL pair multiset (so the oracle and the returned
+    frame are bit-unchanged — it is purely a physical re-plan). Use
+    it when the corpus is dup-heavy (near-identical vectors share an
+    argmax, so real dup clusters concentrate in few cells) or when
+    #cells < cores pins the pair stage below machine parallelism
+    (dd14's static-16 receipt). On the √N path B>1 replaces the
+    per-cell repartition (the blocked join carries its own pinned
+    (cell, blk, partner) exchange).
     """
-    from trello_github_etl_spark.operators.similarity import (
-        auto_seed_centroids,
-        cell_pairs,
-        ivf_assign,
+    assign, blocks, sqrt_k = _ivf_cells(
+        embeddings, centroids, vec_col, id_col, cache_key
     )
-
-    auto_k: int | None = None
-    if centroids is None:
-        centroids, suffix, seed_k = auto_seed_centroids(
-            embeddings, nlist, vec_col, id_col
-        )
-        if nlist is None:
-            # only the true √N derivation guarantees enough cells for
-            # the pin+repartition below to buy parallelism (and an
-            # eager checkpoint job a plan-only caller didn't ask
-            # for); explicit-nlist self-seeders own their k and keep
-            # the plain plan
-            auto_k = seed_k
-        if cache_key is not None:
-            cache_key = cache_key + suffix
-    elif nlist is not None:
-        raise ValueError(
-            "nlist applies only to the self-seeding path; pass either "
-            "centroids or nlist, not both"
-        )
-    cells = ivf_assign(embeddings, centroids, 1, vec_col, id_col, cache_key)
-    if auto_k is None:
+    if pair_blocks is not None:
+        blocks = pair_blocks
+    cells = assign(embeddings)
+    if sqrt_k is None:
         # Static-centroid path: one pin computes the O(N·k·dim)
         # assignment once for the pair join's two sides and the final
         # verdict join (r15, VERDICT r14 #4). persist, not
@@ -1532,9 +1522,9 @@ def semantic_dedup(
         # checkpoint 2.28 s (a wash). Verdict frames bit-identical
         # under all three shapes.
         cells = cells.persist()
-    pair_src = cells
-    if auto_k is not None:
-        # Auto path only (k=√N ⇒ enough cells for join parallelism):
+        pair_src = cells
+    else:
+        # √N path only (k=√N ⇒ enough cells for join parallelism):
         # (a) localCheckpoint pins the O(N·k·dim) assignment ONCE —
         # the pair self-join and the final verdict join key on
         # different columns, so without the pin the assignment pass
@@ -1553,18 +1543,16 @@ def semantic_dedup(
         # receipts, s9-trained) keep their original plan: with few
         # cells an equi-join's parallelism is ≤ #cells regardless,
         # which is one more reason a static cell count dies at scale.
+        # The blocked join (blocks > 1) repartitions on (cell, blk,
+        # partner) itself, so it skips the per-cell exchange.
         cells = cells.localCheckpoint(eager=True)
-        if pair_blocks == 1:
-            pair_src = cells.repartition(auto_k, F.col("cell"))
-        else:
-            # blocked join repartitions on (cell, blk, partner)
-            # itself — a per-cell repartition here would be a wasted
-            # extra exchange
-            pair_src = cells
+        pair_src = (
+            cells.repartition(sqrt_k, F.col("cell")) if blocks == 1 else cells
+        )
     # the shared pinned cell-equi-join shape (similarity.cell_pairs —
     # one definition with s15's mutual-kNN graph; r5 code review)
     pairs = (
-        cell_pairs(pair_src, vec_col, id_col, pair_blocks)
+        cell_pairs(pair_src, vec_col, id_col, blocks)
         .filter(F.col("cos") >= threshold)
         .select(
             F.col("va").alias("doc_a"),
@@ -1597,14 +1585,11 @@ def semantic_dedup(
 def incremental_semantic_dedup(
     batch: DataFrame,
     state: DataFrame,
-    centroids: DataFrame | None = None,
+    centroids: "DataFrame | Callable[[int], int]" = linear_nlist,
     threshold: float = 0.92,
     vec_col: str = "embedding",
     id_col: str = "vec_id",
     cache_key: str | None = None,
-    pair_blocks: int | None = None,
-    two_level: bool | None = None,
-    k: int | None = None,
 ) -> DataFrame:
     """Day-N SemDeDup: classify a NEW batch of vectors against the
     committed corpus state without re-clustering anything — the
@@ -1616,14 +1601,12 @@ def incremental_semantic_dedup(
 
     Inputs: ``state`` = the committed exemplar set (the 'kept'
     vectors of prior rounds), ``centroids`` = the committed coarse
-    structure — FROZEN: batch vectors assign to the existing cells
-    (similarity.ivf_assign's narrow codegen pass), which is what
-    makes the run incremental. ``centroids=None`` (the default since
-    r13, VERDICT r12 #4) self-seeds the linear-occupancy tier from
-    ``state`` and applies the scale bundle (two-level assignment,
-    pair_blocks=LINEAR_PAIR_BLOCKS) — the obvious call is the
-    configuration that survived the 50× probe. Periodic re-seeding/compaction is a
-    separate dd24 re-run, exactly like a streaming LSM's major
+    structure — a FROZEN (cent_id, c_vec) table: batch vectors
+    assign to the existing cells (similarity.ivf_assign's narrow
+    codegen pass), which is what makes the run incremental. A policy
+    (see similarity._ivf_cells; default ``linear_nlist``) self-seeds
+    the cells from ``state`` instead. Periodic re-seeding/compaction
+    is a separate dd24 re-run, exactly like a streaming LSM's major
     compaction.
 
     Verdict per batch vector, in precedence order:
@@ -1642,80 +1625,28 @@ def incremental_semantic_dedup(
     state probe is an EQUI-join on cell (the planner broadcasts a
     small batch side and AQE flips to shuffle beyond — both right);
     in-batch candidates reuse cell_pairs' pinned equi-join; two
-    small aggregates keyed on the batch id. The state side is
+    small aggregates keyed on the batch id. Under block salting the
+    state probe is blocked too: a dup-heavy batch concentrates in the
+    cells its dups' exemplars live in, so one (cell) task would own
+    |batch_cell|·|state_cell| cosine folds alone. The state side is
     O(corpus) HERE only because the oracle-checkable form recomputes
     state cell assignments from the raw table — a deployment
     persists (id, cell, norm) alongside the exemplars, making the
     per-batch cost O(batch x occupancy) (dd23's lesson-40 note,
     same asymptotic caveat)."""
-    from trello_github_etl_spark.operators.similarity import (
-        LINEAR_PAIR_BLOCKS,
-        auto_seed_centroids,
-        blocked_cell_sides,
-        cell_pairs,
-        cosine_prenormed,
-        ivf_assign,
-        ivf_assign_2level,
-        linear_nlist,
+    assign, blocks, _sqrt_k = _ivf_cells(
+        state, centroids, vec_col, id_col, cache_key
     )
-
-    if centroids is None:
-        # DEFAULT CONFIG (r13, VERDICT r12 #4): with no committed
-        # coarse structure supplied, self-seed the linear-occupancy
-        # tier from the STATE corpus (the committed exemplar set —
-        # the structure a deployment would have frozen) and apply the
-        # scale bundle: two-level assignment + block-salted joins.
-        # Callers with a frozen structure pass it explicitly and own
-        # their knobs, exactly as before.
-        centroids, suffix, seed_k = auto_seed_centroids(
-            state, linear_nlist, vec_col, id_col
-        )
-        if k is None:
-            k = seed_k
-        if two_level is None:
-            two_level = True
-        if pair_blocks is None:
-            pair_blocks = LINEAR_PAIR_BLOCKS
-        if cache_key is not None:
-            cache_key = cache_key + suffix
-    if two_level is None:
-        two_level = False
-    if pair_blocks is None:
-        pair_blocks = 1
-
-    if two_level:
-        # linear-nlist discipline (VERDICT r11 #1): with
-        # nlist = N/target the flat assignment pass is itself
-        # O(N·nlist·dim) = quadratic — ivf_assign_2level keeps it
-        # O(N·√nlist·dim); ``k`` (the centroid count) is required
-        # because the hierarchical split point is ⌈√k⌉
-        if k is None:
-            raise ValueError("two_level requires k (the centroid count)")
-        b = ivf_assign_2level(batch, centroids, k, vec_col, id_col, cache_key)
-        s = ivf_assign_2level(state, centroids, k, vec_col, id_col, cache_key)
-    else:
-        b = ivf_assign(batch, centroids, 1, vec_col, id_col, cache_key)
-        s = ivf_assign(state, centroids, 1, vec_col, id_col, cache_key)
-    sren = s.select(
+    b = assign(batch)
+    sren = assign(state).select(
         "cell",
         F.col(id_col).alias("_sid"),
         F.col(vec_col).alias("_svec"),
         F.col("_norm").alias("_snorm"),
     )
-    if pair_blocks == 1:
-        probe = b.join(sren, "cell")
-    else:
-        # state-probe skew lever: a dup-heavy batch concentrates in
-        # the cells its dups' exemplars live in, so one (cell) task
-        # would own |batch_cell|·|state_cell| cosine folds alone —
-        # blocked_cell_sides spreads it over B² tasks with an
-        # identical pair multiset (same invariant as cell_pairs')
-        bx, by, bcond = blocked_cell_sides(
-            b, sren, id_col, "_sid", pair_blocks
-        )
-        probe = bx.join(by, bcond)
     hits = (
-        probe.filter(
+        cell_join(b, sren, id_col, "_sid", blocks)
+        .filter(
             cosine_prenormed(
                 F.col(vec_col),
                 F.col("_svec"),
@@ -1728,7 +1659,7 @@ def incremental_semantic_dedup(
         .agg(F.min("_sid").alias("_state_match"))
     )
     peers = (
-        cell_pairs(b, vec_col, id_col, pair_blocks)
+        cell_pairs(b, vec_col, id_col, blocks)
         .filter(F.col("cos") >= threshold)
         .groupBy(F.col("vb").alias(id_col))
         .agg(F.min("va").alias("_peer_min"))

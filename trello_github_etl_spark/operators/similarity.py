@@ -223,50 +223,9 @@ def linear_nlist(n: int, target: int = LINEAR_CELL_TARGET) -> int:
     )
 
 
-# Block factor the linear tier salts giant cells with (cell_pairs /
-# blocked_cell_sides — bit-identical pair multiset over B² tasks).
-# Single-homed here since r13; queries import it.
+# Block factor the linear policy salts giant cells with (cell_join —
+# bit-identical pair multiset over B² tasks).
 LINEAR_PAIR_BLOCKS = 4
-
-# Sentinel: "caller didn't choose a cell policy". Distinguishes an
-# OMITTED nlist (→ the linear default bundle) from an explicit
-# nlist=None (→ the √N pedagogical tier, the pre-r13 default).
-_DEFAULT_NLIST = object()
-
-
-def _resolve_mining_config(centroids, nlist, pair_blocks, two_level):
-    """Default configuration of the ANN *mining* entry points
-    (mutual_knn_graph / margin_alignment / hard_negative_mining) —
-    VERDICT r12 #4: the obvious self-seeding call now gets the
-    LINEAR-occupancy tier (nlist=linear_nlist + two-level assignment
-    + pair_blocks={LINEAR_PAIR_BLOCKS}), the configuration whose 50×
-    corpus probe stayed in the corpus-linear band (2.9–4.3×) where
-    the √N tier grew 11–16×. The √N tier remains the documented
-    opt-in pedagogy: pass nlist=auto_nlist (or None) explicitly.
-    Explicit centroids are untouched — the caller owns the coarse
-    structure and the flat-assignment plan.
-
-    Resolution:
-    - nlist omitted + centroids=None  -> linear_nlist, and UNSET
-      two_level/pair_blocks fill in as True/{LINEAR_PAIR_BLOCKS}.
-    - nlist omitted + explicit centroids -> None (no policy; flat
-      assignment against the given cells).
-    - anything explicit wins over the bundle.
-    """
-    if nlist is _DEFAULT_NLIST:
-        if centroids is None:
-            nlist = linear_nlist
-            if two_level is None:
-                two_level = True
-            if pair_blocks is None:
-                pair_blocks = LINEAR_PAIR_BLOCKS
-        else:
-            nlist = None
-    if pair_blocks is None:
-        pair_blocks = 1
-    if two_level is None:
-        two_level = False
-    return nlist, pair_blocks, two_level
 
 
 def auto_seed_centroids(
@@ -713,6 +672,65 @@ def ivf_assign_2level(
             id_col, F.expr(cell).alias("cell"), vec_col, "_norm", *extra_cols
         )
     )
+
+
+def _ivf_cells(
+    corpus: DataFrame,
+    centroids: "DataFrame | Callable[[int], int]",
+    vec_col: str,
+    id_col: str,
+    cache_key: str | None,
+) -> "tuple[Callable[..., DataFrame], int, int | None]":
+    """Resolve the ONE cell argument of the IVF-cell operators
+    (semantic_dedup, incremental_semantic_dedup, mutual_knn_graph,
+    margin_alignment, hard_negative_mining) into everything they
+    derive from it. ``centroids`` is one of:
+
+    - a frozen (cent_id, c_vec) table: flat assignment against it,
+      ``cache_key`` as given, no block salting;
+    - ``auto_nlist``: self-seed ⌈√N⌉ cells from ``corpus``, flat
+      assignment, no block salting, and the √N cell count returned
+      for the cell-keyed repartition;
+    - ``linear_nlist``: self-seed ⌈N/target⌉ cells from ``corpus``,
+      TWO-LEVEL assignment (flat assignment against N/target cells
+      is O(N²·dim/target) — see ivf_assign_2level), and
+      LINEAR_PAIR_BLOCKS block salting for the residual hot cells.
+
+    Self-seeded paths append auto_seed_centroids' (k, N) suffix to
+    ``cache_key``. Returns ``(assign, blocks, sqrt_k)``:
+    ``assign(frame, extra_cols=())`` is the cell assignment of any
+    frame against the resolved cells, ``blocks`` the cell_join block
+    count, ``sqrt_k`` the √N cell count (None off the auto_nlist
+    policy).
+    """
+    k: int | None = None
+    two_level = False
+    sqrt_k: int | None = None
+    if not isinstance(centroids, DataFrame):
+        if centroids is not auto_nlist and centroids is not linear_nlist:
+            raise ValueError(
+                "centroids must be a (cent_id, c_vec) table, auto_nlist "
+                f"or linear_nlist, got {centroids!r}"
+            )
+        two_level = centroids is linear_nlist
+        centroids, suffix, k = auto_seed_centroids(
+            corpus, centroids, vec_col, id_col
+        )
+        if not two_level:
+            sqrt_k = k
+        if cache_key is not None:
+            cache_key = cache_key + suffix
+
+    def assign(frame: DataFrame, extra_cols: tuple = ()) -> DataFrame:
+        if two_level:
+            return ivf_assign_2level(
+                frame, centroids, k, vec_col, id_col, cache_key, extra_cols
+            )
+        return ivf_assign(
+            frame, centroids, 1, vec_col, id_col, cache_key, extra_cols
+        )
+
+    return assign, (LINEAR_PAIR_BLOCKS if two_level else 1), sqrt_k
 
 
 def ivf_topk(
@@ -1424,77 +1442,93 @@ def matryoshka_rerank_topk(
     return _exact_rerank(cand, queries, targets, topk, query_vec, target_vec)
 
 
-def blocked_cell_sides(
+def cell_join(
     x_frame: DataFrame,
     y_frame: DataFrame,
     x_id: str,
     y_id: str,
-    blocks: int,
-) -> tuple[DataFrame, DataFrame, Column]:
-    """Salt two cell-assigned frames for a BLOCKED cell equi-join —
-    the giant-cell skew lever, single-homed (r12: cell_pairs'
-    self-join, margin_alignment's cross-side join and
-    hard_negative_mining's label join all splice this; before the
-    extraction each would have re-implemented the salting and the
-    partner-match invariant could fork silently).
+    blocks: int = 1,
+    on: Column | None = None,
+) -> DataFrame:
+    """The cell equi-join of two cell-assigned frames, aliased ``x``
+    and ``y`` — the one join every IVF-cell operator builds its
+    candidates with (cell_pairs' self-join, margin_alignment's
+    cross-side join, hard_negative_mining's label join,
+    incremental_semantic_dedup's state probe). ``on`` is ANDed onto
+    the cell condition (id inequality, label inequality, …) so those
+    predicates still reject pairs inside the join.
 
-    Each row gets ``_blk`` = hash(id) % B and is replicated against
-    every partner block ``_pb`` ∈ [0, B); the returned join condition
-    (cell, x._blk = y._pb, x._pb = y._blk) matches every (x, y) pair
-    on EXACTLY ONE replica combination (x's replica with _pb = y's
-    block meets y's replica with _pb = x's block), so the pair
-    multiset is identical to the plain cell equi-join — purely a
+    ``blocks`` = 1 is the plain ``x.cell = y.cell`` join. ``blocks``
+    = B > 1 is the GIANT-CELL skew lever: with the plain join one
+    task owns one cell, so a cell holding c vectors does c²/2 cosine
+    folds alone while every other core idles — and dup-heavy corpora
+    produce exactly such cells, because near-identical vectors share
+    an argmax by construction. Each row gets ``_blk`` = hash(id) % B
+    and is replicated against every partner block ``_pb`` ∈ [0, B);
+    the join condition (cell, x._blk = y._pb, x._pb = y._blk) matches
+    every (x, y) pair on EXACTLY ONE replica combination (x's replica
+    with _pb = y's block meets y's replica with _pb = x's block), so
+    the pair multiset is identical to the plain join — purely a
     physical re-plan spreading one cell's quadratic work over B²
-    independent tasks at a B× replication cost through the shuffle.
-    Callers AND their own predicates (id inequality, label
-    inequality, …) onto the returned condition.
+    independent tasks of ≤ (c/B)² folds at a B× replication cost
+    through the shuffle. Total cosine work is unchanged; the cell
+    count remains the asymptotic-total-work fix (blocks only spreads
+    the work).
 
-    Both sides are explicitly repartitioned on their key columns with
-    a pinned partition count because AQE coalesces shuffles on input
-    BYTES and cannot see the cosine folds Catalyst pushes into the
-    join condition (SCALE.md lesson 36); an explicit numPartitions
-    repartition is exempt. The shuffle_hash hint pins the join onto
-    those exchanges — otherwise Catalyst broadcasts whichever side
-    fits under autoBroadcastJoinThreshold, which at 100 TB is a
-    broadcast of the corpus (lesson 36 (a)), and sort-merge would add
-    a per-partition sort the bounded (≤ c/B)-row hash build doesn't
-    need.
+    Blocked sides are explicitly repartitioned on their key columns
+    with a pinned partition count because AQE coalesces shuffles on
+    input BYTES and cannot see the cosine folds Catalyst pushes into
+    the join condition (SCALE.md lesson 36); an explicit
+    numPartitions repartition is exempt. The shuffle_hash hint pins
+    the join onto those exchanges — otherwise Catalyst broadcasts
+    whichever side fits under autoBroadcastJoinThreshold, which at
+    100 TB is a broadcast of the corpus (lesson 36 (a)), and
+    sort-merge would add a per-partition sort the bounded
+    (≤ c/B)-row hash build doesn't need.
     """
+    if blocks < 1:
+        raise ValueError(f"blocks must be >= 1, got {blocks}")
+    if blocks == 1:
+        x, y = x_frame.alias("x"), y_frame.alias("y")
+        cond = F.col("x.cell") == F.col("y.cell")
+    else:
 
-    def _salted(frame: DataFrame, id_col: str) -> DataFrame:
-        return frame.withColumn(
-            "_blk",
-            F.pmod(F.xxhash64(F.col(id_col)), F.lit(blocks)).cast("int"),
-        ).withColumn(
-            "_pb", F.explode(F.array(*[F.lit(j) for j in range(blocks)]))
-        )
+        def _salted(frame: DataFrame, id_col: str) -> DataFrame:
+            return frame.withColumn(
+                "_blk",
+                F.pmod(F.xxhash64(F.col(id_col)), F.lit(blocks)).cast("int"),
+            ).withColumn(
+                "_pb", F.explode(F.array(*[F.lit(j) for j in range(blocks)]))
+            )
 
-    # the conf value is non-integer on some platforms (e.g. "auto"
-    # under Databricks auto-optimized shuffle) — fall back to the
-    # cluster's default parallelism (r7 advice)
-    try:
-        nparts = int(
-            x_frame.sparkSession.conf.get("spark.sql.shuffle.partitions")
+        # the conf value is non-integer on some platforms (e.g. "auto"
+        # under Databricks auto-optimized shuffle) — fall back to the
+        # cluster's default parallelism (r7 advice)
+        try:
+            nparts = int(
+                x_frame.sparkSession.conf.get("spark.sql.shuffle.partitions")
+            )
+        except (TypeError, ValueError):
+            nparts = x_frame.sparkSession.sparkContext.defaultParallelism
+        x = (
+            _salted(x_frame, x_id)
+            .repartition(nparts, F.col("cell"), F.col("_blk"), F.col("_pb"))
+            .alias("x")
         )
-    except (TypeError, ValueError):
-        nparts = x_frame.sparkSession.sparkContext.defaultParallelism
-    x = (
-        _salted(x_frame, x_id)
-        .repartition(nparts, F.col("cell"), F.col("_blk"), F.col("_pb"))
-        .alias("x")
-    )
-    y = (
-        _salted(y_frame, y_id)
-        .repartition(nparts, F.col("cell"), F.col("_pb"), F.col("_blk"))
-        .hint("shuffle_hash")
-        .alias("y")
-    )
-    cond = (
-        (F.col("x.cell") == F.col("y.cell"))
-        & (F.col("x._blk") == F.col("y._pb"))
-        & (F.col("x._pb") == F.col("y._blk"))
-    )
-    return x, y, cond
+        y = (
+            _salted(y_frame, y_id)
+            .repartition(nparts, F.col("cell"), F.col("_pb"), F.col("_blk"))
+            .hint("shuffle_hash")
+            .alias("y")
+        )
+        cond = (
+            (F.col("x.cell") == F.col("y.cell"))
+            & (F.col("x._blk") == F.col("y._pb"))
+            & (F.col("x._pb") == F.col("y._blk"))
+        )
+    if on is not None:
+        cond = cond & on
+    return x.join(y, cond)
 
 
 def cell_pairs(
@@ -1509,72 +1543,36 @@ def cell_pairs(
     mutual-kNN graph (s15). One definition so the id tie-break and
     prenormed-cosine handling cannot fork between the two call sites
     (r5 code review — the _rank_topk consolidation's lesson).
-    Returns (va, vb, cos) with va < vb.
-
-    ``blocks`` (default 1 = the original pinned shape, untouched) is
-    the GIANT-CELL skew lever: with the plain cell equi-join, one
-    task owns one cell, so a cell holding c vectors does c²/2 cosine
-    folds alone while every other core idles — and dup-heavy corpora
-    (SemDeDup's actual target) produce exactly such cells, because
-    near-identical vectors share an argmax by construction. With
-    blocks=B each row is hashed into one of B sub-blocks on
-    ``id_col`` and replicated against every partner block, so the
-    join key becomes (cell, own-block, partner-block): the same pair
-    multiset comes out (each unordered pair matches on exactly one
-    ordered block combination — the smaller-id row's partner pick
-    equal to the larger-id row's own block, and vice versa), but one
-    cell's quadratic work is now spread over B² independent tasks of
-    ≤ (c/B)² folds. Total cosine work is UNCHANGED (the blocking
-    partitions the pair enumeration exactly — no candidate is scored
-    twice or wasted); the price is a B× row replication through the
-    pair shuffle. Both sides are explicitly repartitioned on their
-    key columns with a pinned partition count because AQE coalesces
-    shuffles on input BYTES and cannot see the cosine folds that
-    Catalyst pushes into the join condition (SCALE.md lesson 36);
-    an explicit numPartitions repartition is exempt. A shuffle_hash
-    hint pins the join onto those exchanges — otherwise Catalyst
-    broadcasts whichever side fits under autoBroadcastJoinThreshold,
-    which at 100 TB is a broadcast of the corpus (lesson 36 (a)),
-    and sort-merge would add a per-partition sort the bounded
-    (≤ c/B)-row hash build doesn't need. Use when cell
-    occupancy is skewed or #cells < cores; the √N cell count remains
-    the asymptotic-total-work fix (blocks only spreads the work).
+    Returns (va, vb, cos) with va < vb. ``blocks`` is cell_join's
+    giant-cell skew lever (identical pair multiset); use B > 1 when
+    cell occupancy is skewed or #cells < cores.
     """
-    if blocks < 1:
-        raise ValueError(f"blocks must be >= 1, got {blocks}")
-    if blocks == 1:
-        x, y = cells.alias("x"), cells.alias("y")
-        cond = (F.col("x.cell") == F.col("y.cell")) & (
-            F.col(f"x.{id_col}") < F.col(f"y.{id_col}")
-        )
-    else:
-        x, y, cond = blocked_cell_sides(cells, cells, id_col, id_col, blocks)
-        cond = cond & (F.col(f"x.{id_col}") < F.col(f"y.{id_col}"))
-    return (
-        x.join(y, cond)
-        .select(
-            F.col(f"x.{id_col}").alias("va"),
-            F.col(f"y.{id_col}").alias("vb"),
-            cosine_prenormed(
-                F.col(f"x.{vec_col}"),
-                F.col(f"y.{vec_col}"),
-                F.col("x._norm"),
-                F.col("y._norm"),
-            ).alias("cos"),
-        )
+    return cell_join(
+        cells,
+        cells,
+        id_col,
+        id_col,
+        blocks,
+        F.col(f"x.{id_col}") < F.col(f"y.{id_col}"),
+    ).select(
+        F.col(f"x.{id_col}").alias("va"),
+        F.col(f"y.{id_col}").alias("vb"),
+        cosine_prenormed(
+            F.col(f"x.{vec_col}"),
+            F.col(f"y.{vec_col}"),
+            F.col("x._norm"),
+            F.col("y._norm"),
+        ).alias("cos"),
     )
 
 
 def mutual_knn_graph(
     embeddings: DataFrame,
-    centroids: DataFrame | None = None,
+    centroids: "DataFrame | Callable[[int], int]" = linear_nlist,
     k: int = 3,
     vec_col: str = "embedding",
     id_col: str = "vec_id",
     cache_key: str | None = None,
-    nlist: "int | Callable[[int], int] | None" = _DEFAULT_NLIST,
-    pair_blocks: int | None = None,
-    two_level: bool | None = None,
 ) -> DataFrame:
     """Mutual k-NN graph over the corpus — the candidate structure
     semantic-dedup and diversity-sampling pipelines build first
@@ -1600,73 +1598,26 @@ def mutual_knn_graph(
     break (cos DESC, neighbor id ASC) — deterministic on both
     engines given the strict-fold cosines.
 
-    Cell-count policy (VERDICT r6 #1c): when ``centroids`` is None
-    the operator SELF-SEEDS via auto_seed_centroids — √N clamped
-    cells (override with ``nlist``), lowest-id seeds. A static cell
-    count was the repo's worst sf0.1→sf1 scaler (s15 at 8.9× under
-    nlist=16); per-cell population grows linearly with the corpus and
-    pair work quadratically. Callers with trained centroids (s9
-    k-means) still pass them explicitly — ``nlist`` alongside
-    explicit centroids is a contradiction and raises.
-
-    ``pair_blocks`` forwards to cell_pairs' giant-cell skew lever
-    (see its docstring): B>1 spreads one cell's quadratic candidate
-    scoring over B² tasks with an identical pair multiset — the kNN
-    ranking downstream is untouched, so the graph is bit-identical.
-
-    DEFAULT CONFIG (r13, VERDICT r12 #4): a self-seeding call with
-    ``nlist`` omitted gets the LINEAR-occupancy bundle —
-    nlist=linear_nlist, two_level=True, pair_blocks=LINEAR_PAIR_BLOCKS
-    (see _resolve_mining_config; the 50×-swept scale configuration).
-    The √N tier (the pre-r13 default, with its cell-keyed
-    repartition plan) is the documented opt-in: pass
-    ``nlist=auto_nlist``. Any explicitly-passed knob wins over the
-    bundle. ``two_level`` requires the self-seeding path (explicit
-    centroids raise).
+    ``centroids`` is the cell argument (see _ivf_cells): a frozen
+    (cent_id, c_vec) table (s9's trained k-means), ``auto_nlist``
+    (√N cells) or ``linear_nlist`` (the default: constant expected
+    occupancy, two-level assignment and block-salted pairs — the
+    configuration whose 50× corpus probe stayed corpus-linear, where
+    √N grew 11–16×). A static cell count was the repo's worst
+    sf0.1→sf1 scaler (s15 at 8.9× under nlist=16): per-cell
+    population grows linearly with the corpus and pair work
+    quadratically.
     """
     from pyspark.sql.window import Window
 
     from trello_github_etl_spark.operators.gen import exploded
 
-    nlist, pair_blocks, two_level = _resolve_mining_config(
-        centroids, nlist, pair_blocks, two_level
+    assign, blocks, sqrt_k = _ivf_cells(
+        embeddings, centroids, vec_col, id_col, cache_key
     )
-    auto_k: int | None = None
-    seed_k: int | None = None
-    if centroids is None:
-        # NOTE: the unpacked cell count must NOT be named ``k`` — it
-        # would shadow the kNN neighbor-count parameter and silently
-        # turn the top-k filter into top-nlist (caught by
-        # test_mutual_knn_auto_equals_explicit)
-        centroids, suffix, seed_k = auto_seed_centroids(
-            embeddings, nlist, vec_col, id_col
-        )
-        if nlist is None or nlist is auto_nlist:
-            # only the true √N derivation guarantees enough cells for
-            # the repartition below to buy parallelism; explicit-nlist
-            # self-seeders own their k and keep the plain plan
-            auto_k = seed_k
-        if cache_key is not None:
-            cache_key = cache_key + suffix
-    elif nlist is not None:
-        raise ValueError(
-            "nlist applies only to the self-seeding path; pass either "
-            "centroids or nlist, not both"
-        )
-    elif two_level:
-        raise ValueError(
-            "two_level requires the self-seeding path (centroids=None)"
-        )
-    if two_level:
-        cells = ivf_assign_2level(
-            embeddings, centroids, seed_k, vec_col, id_col, cache_key
-        )
-    else:
-        cells = ivf_assign(
-            embeddings, centroids, 1, vec_col, id_col, cache_key
-        )
-    if auto_k is not None:
-        # auto path: explicit k-way repartition BY CELL before the
+    cells = assign(embeddings)
+    if sqrt_k is not None:
+        # √N path: explicit k-way repartition BY CELL before the
         # self-join — an explicit numPartitions exchange is exempt
         # from AQE's byte-based coalescing, which otherwise collapses
         # the pair stage's parallelism while its real cost (the
@@ -1675,12 +1626,10 @@ def mutual_knn_graph(
         # Both self-join sides reuse this one exchange, per-task work
         # is bounded by per-cell occupancy, and the corpus side is
         # never broadcast (the locally-fast BHJ-of-the-corpus plan
-        # dies at scale).
-        if pair_blocks == 1:
-            cells = cells.repartition(auto_k, F.col("cell"))
-        # blocked join (pair_blocks > 1) repartitions on
-        # (cell, blk, partner) itself — skip the wasted exchange
-    pairs = cell_pairs(cells, vec_col, id_col, pair_blocks)
+        # dies at scale). Only the √N count guarantees enough cells
+        # for the repartition to buy parallelism.
+        cells = cells.repartition(sqrt_k, F.col("cell"))
+    pairs = cell_pairs(cells, vec_col, id_col, blocks)
     both_dirs = F.array(
         F.struct(
             F.col("va").alias("src"),
@@ -1716,14 +1665,11 @@ def mutual_knn_graph(
 def margin_alignment(
     xs: DataFrame,
     ys: DataFrame,
-    centroids: DataFrame | None = None,
+    centroids: "DataFrame | Callable[[int], int]" = linear_nlist,
     k: int = 4,
     vec_col: str = "embedding",
     id_col: str = "vec_id",
     cache_key: str | None = None,
-    nlist: "int | Callable[[int], int] | None" = _DEFAULT_NLIST,
-    pair_blocks: int | None = None,
-    two_level: bool | None = None,
 ) -> DataFrame:
     """Margin-based bitext/cross-corpus alignment scoring (Artetxe &
     Schwenk 2019's ratio margin, the xSIM/LASER mining criterion;
@@ -1742,12 +1688,13 @@ def margin_alignment(
     mirroring the cosine guard's convention.
 
     Blocked-candidate approximation (the s15 discipline): both sides
-    assign to SHARED coarse cells (self-seeded √N over the union
-    when ``centroids`` is None) and candidates/neighborhoods are
-    within-cell only — O(Σ|xcell|·|ycell|) cross work, never the
-    |X|·|Y| product. avgNN therefore averages the k best IN-CELL
-    neighbors; a cross-cell true pair is missed exactly as in every
-    IVF retrieval path (recall-tested vs brute force, not hidden).
+    assign to SHARED coarse cells (self-seeded over the union when
+    ``centroids`` is a policy — see _ivf_cells; default
+    ``linear_nlist``) and candidates/neighborhoods are within-cell
+    only — O(Σ|xcell|·|ycell|) cross work, never the |X|·|Y|
+    product. avgNN therefore averages the k best IN-CELL neighbors;
+    a cross-cell true pair is missed exactly as in every IVF
+    retrieval path (recall-tested vs brute force, not hidden).
 
     Numeric parity contract: the top-k mean takes the k LARGEST
     cosine values as a multiset (ties at the boundary contribute
@@ -1763,67 +1710,26 @@ def margin_alignment(
     broadcast-or-shuffle joins of KB-per-row stats back onto the
     pairs, one per-x window on the x-keyed shuffle. The per-side
     stats frames are side-sized (one row per surviving x/y), far
-    under the pair count.
-
-    DEFAULT CONFIG (r13, VERDICT r12 #4): omitted ``nlist`` on the
-    self-seeding path resolves to the linear-occupancy bundle; pass
-    ``nlist=auto_nlist`` for the √N pedagogical tier (see
-    _resolve_mining_config)."""
+    under the pair count."""
     from pyspark.sql.window import Window
 
-    nlist, pair_blocks, two_level = _resolve_mining_config(
-        centroids, nlist, pair_blocks, two_level
+    assign, blocks, _sqrt_k = _ivf_cells(
+        xs.select(id_col, vec_col).unionByName(ys.select(id_col, vec_col)),
+        centroids,
+        vec_col,
+        id_col,
+        cache_key,
     )
-    seed_k: int | None = None
-    if centroids is None:
-        centroids, suffix, seed_k = auto_seed_centroids(
-            xs.select(id_col, vec_col).unionByName(
-                ys.select(id_col, vec_col)
-            ),
-            nlist,
-            vec_col,
-            id_col,
-        )
-        if cache_key is not None:
-            cache_key = cache_key + suffix
-    elif nlist is not None:
-        raise ValueError(
-            "nlist applies only to the self-seeding path; pass either "
-            "centroids or nlist, not both"
-        )
-    elif two_level:
-        raise ValueError(
-            "two_level requires the self-seeding path (centroids=None)"
-        )
-    if two_level:
-        # linear-nlist discipline (VERDICT r11 #1): hierarchical
-        # assignment keeps the pass O(N·√nlist·dim) — see
-        # ivf_assign_2level; flat assignment at nlist = N/target
-        # would itself be quadratic in the corpus
-        xc = ivf_assign_2level(xs, centroids, seed_k, vec_col, id_col, cache_key)
-        yc = ivf_assign_2level(ys, centroids, seed_k, vec_col, id_col, cache_key)
-    else:
-        xc = ivf_assign(xs, centroids, 1, vec_col, id_col, cache_key)
-        yc = ivf_assign(ys, centroids, 1, vec_col, id_col, cache_key)
-    yren = yc.select(
+    xc = assign(xs)
+    yren = assign(ys).select(
         "cell",
         F.col(id_col).alias("_y_id"),
         F.col(vec_col).alias("_y_vec"),
         F.col("_norm").alias("_y_norm"),
     )
-    if pair_blocks == 1:
-        base = xc.join(yren, "cell")
-    else:
-        # giant-cell skew lever: identical pair multiset, one cell's
-        # |xcell|·|ycell| cosine work spread over B² tasks
-        # (blocked_cell_sides' invariant) — margin/avg stages are
-        # untouched, so the output frame is bit-identical
-        bx, by, bcond = blocked_cell_sides(
-            xc, yren, id_col, "_y_id", pair_blocks
-        )
-        base = bx.join(by, bcond)
     pairs = (
-        base.select(
+        cell_join(xc, yren, id_col, "_y_id", blocks)
+        .select(
             F.col(id_col).alias("x_id"),
             F.col("_y_id").alias("y_id"),
             cosine_prenormed(
@@ -1874,15 +1780,12 @@ def margin_alignment(
 
 def hard_negative_mining(
     embeddings: DataFrame,
-    centroids: DataFrame | None = None,
+    centroids: "DataFrame | Callable[[int], int]" = linear_nlist,
     k: int = 3,
     vec_col: str = "embedding",
     id_col: str = "vec_id",
     label_col: str = "label",
     cache_key: str | None = None,
-    nlist: "int | Callable[[int], int] | None" = _DEFAULT_NLIST,
-    pair_blocks: int | None = None,
-    two_level: bool | None = None,
 ) -> DataFrame:
     """Hard-negative mining for contrastive/embedding training: for
     every anchor vector, the k nearest IN-CELL vectors carrying a
@@ -1900,91 +1803,37 @@ def hard_negative_mining(
     geometry, which is the whole premise of embedding training) are
     rejected by the join before any cosine fold is spent on them —
     filtering after scoring would do the full quadratic in-cell work
-    only to drop most of it. Candidates come from the shared
-    self-seeded √N cells (never all-pairs); each unordered cross-
-    label pair is scored once and exploded into its two directed
-    rows (Spark dedups exchanges under a union, not join subtrees —
-    r5 code review, same as mutual_knn_graph); one anchor-keyed
-    window takes top-k. The label rides through the assignment's
-    narrow projection (ivf_assign's extra_cols) — no corpus-on-corpus
-    id join anywhere in the plan (r12).
-
-    DEFAULT CONFIG (r13, VERDICT r12 #4): omitted ``nlist`` on the
-    self-seeding path resolves to the linear-occupancy bundle; pass
-    ``nlist=auto_nlist`` for the √N pedagogical tier (see
-    _resolve_mining_config)."""
+    only to drop most of it. Candidates come from the cells of the
+    ``centroids`` argument (see _ivf_cells; default
+    ``linear_nlist``), never all-pairs; each unordered cross-label
+    pair is scored once and exploded into its two directed rows
+    (Spark dedups exchanges under a union, not join subtrees — r5
+    code review, same as mutual_knn_graph); one anchor-keyed window
+    takes top-k. The label rides through the assignment's narrow
+    projection (ivf_assign's extra_cols) — no corpus-on-corpus id
+    join anywhere in the plan (r12: that join was a full corpus
+    shuffle on the s20 50× probe)."""
     from pyspark.sql.window import Window
 
     from trello_github_etl_spark.operators.gen import exploded
 
-    nlist, pair_blocks, two_level = _resolve_mining_config(
-        centroids, nlist, pair_blocks, two_level
+    assign, blocks, sqrt_k = _ivf_cells(
+        embeddings, centroids, vec_col, id_col, cache_key
     )
-    auto_k: int | None = None
-    seed_k: int | None = None
-    if centroids is None:
-        centroids, suffix, seed_k = auto_seed_centroids(
-            embeddings, nlist, vec_col, id_col
-        )
-        if nlist is None or nlist is auto_nlist:
-            auto_k = seed_k
-        if cache_key is not None:
-            cache_key = cache_key + suffix
-    elif nlist is not None:
-        raise ValueError(
-            "nlist applies only to the self-seeding path; pass either "
-            "centroids or nlist, not both"
-        )
-    elif two_level:
-        raise ValueError(
-            "two_level requires the self-seeding path (centroids=None)"
-        )
-    # the label RIDES THROUGH the assignment projection (extra_cols)
-    # instead of re-joining the corpus onto itself by id afterwards —
-    # that join was a full corpus shuffle at scale (r12, measured on
-    # the s20 50× probe)
-    if two_level:
-        # linear-nlist discipline (VERDICT r11 #1) — see
-        # ivf_assign_2level for the assignment-cost argument
-        cl = ivf_assign_2level(
-            embeddings,
-            centroids,
-            seed_k,
-            vec_col,
-            id_col,
-            cache_key,
-            (label_col,),
-        )
-    else:
-        cl = ivf_assign(
-            embeddings,
-            centroids,
-            1,
-            vec_col,
-            id_col,
-            cache_key,
-            (label_col,),
-        )
-    if auto_k is not None and pair_blocks == 1:
+    cl = assign(embeddings, (label_col,))
+    if sqrt_k is not None:
         # explicit cell-keyed repartition before the self-join, exempt
-        # from AQE byte-based coalescing (SCALE.md lesson 36); the
-        # blocked join below carries its own pinned exchange
-        cl = cl.repartition(auto_k, F.col("cell"))
-    if pair_blocks == 1:
-        x, y = cl.alias("x"), cl.alias("y")
-        cond = (F.col("x.cell") == F.col("y.cell"))
-    else:
-        # giant-cell skew lever (blocked_cell_sides): same pair
-        # multiset, one cell's quadratic work over B² tasks; the
-        # label inequality is ANDed on below so same-label pairs
-        # still die inside the join, before any cosine fold
-        x, y, cond = blocked_cell_sides(cl, cl, id_col, id_col, pair_blocks)
-    cond = (
-        cond
-        & (F.col(f"x.{id_col}") < F.col(f"y.{id_col}"))
-        & (F.col(f"x.{label_col}") != F.col(f"y.{label_col}"))
-    )
-    pairs = x.join(y, cond).select(
+        # from AQE byte-based coalescing (SCALE.md lesson 36)
+        cl = cl.repartition(sqrt_k, F.col("cell"))
+    pairs = cell_join(
+        cl,
+        cl,
+        id_col,
+        id_col,
+        blocks,
+        (F.col(f"x.{id_col}") < F.col(f"y.{id_col}"))
+        & (F.col(f"x.{label_col}") != F.col(f"y.{label_col}")),
+    ).select(
         F.col(f"x.{id_col}").alias("va"),
         F.col(f"y.{id_col}").alias("vb"),
         F.col(f"x.{label_col}").alias("la"),

@@ -2394,9 +2394,9 @@ def dd15_semantic_dedup_nlist64(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query("dd24_semantic_dedup_auto", oracle=_semdedup_oracle("auto"))
 def dd24_semantic_dedup_auto(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """dd14's corpus through semantic_dedup's SELF-SEEDING path
-    (centroids=None): one corpus count derives nlist = ceil(√N)
-    clamped to [16, 4096] (similarity.auto_nlist — N=510 → 23 cells
+    """dd14's corpus through semantic_dedup's SELF-SEEDING path (the
+    default centroids=auto_nlist): one corpus count derives nlist =
+    ceil(√N) clamped to [16, 4096] (similarity.auto_nlist — N=510 → 23 cells
     at sf0.01, 2,040 → 46 at sf0.1, 20,400 → 143 at sf1), seeds = the
     nlist lowest-vec_id vectors re-numbered to dense cent_ids. This
     is the production configuration — dd14 (static 16) and dd15
@@ -2905,7 +2905,7 @@ def s15_mutual_knn_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     return similarity.mutual_knn_graph(
         emb,
         k=S15_K,
-        nlist=similarity.auto_nlist,
+        centroids=similarity.auto_nlist,
         cache_key=f"ivfauto-s15|{sf_dir}",
     )
 
@@ -3009,7 +3009,7 @@ def s16_margin_alignment(spark: SparkSession, sf_dir: str) -> DataFrame:
         xs,
         ys,
         k=S16_K,
-        nlist=similarity.auto_nlist,
+        centroids=similarity.auto_nlist,
         cache_key=f"ivfauto-s16|{sf_dir}",
     )
 
@@ -4494,7 +4494,7 @@ def s17_hard_negative_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
     return similarity.hard_negative_mining(
         emb,
         k=S17_K,
-        nlist=similarity.auto_nlist,
+        centroids=similarity.auto_nlist,
         cache_key=f"ivfauto-s17|{sf_dir}",
     )
 
@@ -4942,16 +4942,12 @@ def t23_source_unigram_tvd(spark: SparkSession, sf_dir: str) -> DataFrame:
 # so pair work is O(N·target) — corpus-linear — while the TWO-LEVEL
 # assignment (similarity.ivf_assign_2level) keeps the assignment pass
 # O(N·√nlist·dim) instead of the flat O(N·nlist·dim) that would have
-# re-created the quadratic. pair_blocks=4 (dd26's lever, single-homed
-# in similarity.blocked_cell_sides) spreads residual hot cells over
-# B² tasks with a bit-identical pair multiset. The √N originals stay
-# registered as the measured pedagogical tier, exactly like
+# re-created the quadratic. LINEAR_PAIR_BLOCKS=4 block salting (dd26's
+# lever, similarity.cell_join) spreads residual hot cells over B²
+# tasks with a bit-identical pair multiset. All three follow from the
+# one cell argument, linear_nlist — the operators' default. The √N
+# originals stay registered as the measured receipts, exactly like
 # dd14/dd15 → dd24/dd26.
-
-# single-homed in operators/similarity since r13 (the default-config
-# flip made the operator own the bundle); kept as a module alias for
-# the oracle SQL constants below
-LINEAR_PAIR_BLOCKS = similarity.LINEAR_PAIR_BLOCKS
 
 _LINEAR_NLIST_SQL = (
     f"GREATEST({similarity.IVF_NLIST_MIN},"
@@ -4995,7 +4991,7 @@ def _sql_2level_cells(p: str, extra_cols: tuple = ()) -> str:
     ``p(vec_id, embedding, *extra_cols)`` through the two-level
     chain: argmax super first, then argmax over ONLY the seeds whose
     own super matches — ivf_assign_2level's exact rule, so a Spark
-    two_level=True frame hashes identically."""
+    linear_nlist frame hashes identically."""
     cos_ts = _sql_cosine("t.embedding", "s.s_vec")
     cos_tc = _sql_cosine("t.embedding", "c.c_vec")
     ex = "".join(f", t.{c}" for c in extra_cols)
@@ -5051,16 +5047,15 @@ def s18_mutual_knn_linear(spark: SparkSession, sf_dir: str) -> DataFrame:
     """s15's mutual k-NN graph under the LINEAR cell policy — the
     100 TB configuration (VERDICT r11 #1): nlist = ⌈N/64⌉ constant
     expected occupancy (pair work O(N·64), not O(N^1.5)), two-level
-    assignment (O(N·√nlist·dim)), pair_blocks=4 hot-cell salting
-    (bit-identical multiset; blocked_cell_sides). Candidates are
+    assignment (O(N·√nlist·dim)), 4-block hot-cell salting
+    (bit-identical multiset; similarity.cell_join). Candidates are
     within-SMALLER-cells only, so the graph is a recall-traded
     approximation of s15's — measured, not hidden:
     tests/test_linear_variants.py pins edge recall vs the
     brute-force k-NN ground truth for both variants side by side."""
     emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    # DEFAULT-path call (VERDICT r12 #4): no nlist/two_level/
-    # pair_blocks — the operator's own default bundle IS the linear
-    # tier, so this oracle checks what a bare caller gets.
+    # default cell argument (linear_nlist): this oracle checks what
+    # a bare caller gets.
     return similarity.mutual_knn_graph(
         emb, k=S15_K, cache_key=f"ivflin-s18|{sf_dir}"
     )
@@ -5124,8 +5119,7 @@ def s19_margin_alignment_linear(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     xs = emb.filter(F.col("vec_id") % 2 == 0)
     ys = emb.filter(F.col("vec_id") % 2 == 1)
-    # DEFAULT-path call (VERDICT r12 #4): the operator's default
-    # bundle IS the linear tier.
+    # default cell argument (linear_nlist)
     return similarity.margin_alignment(
         xs, ys, k=S16_K, cache_key=f"ivflin-s19|{sf_dir}"
     )
@@ -5165,13 +5159,12 @@ def s20_hard_negatives_linear(spark: SparkSession, sf_dir: str) -> DataFrame:
     s18's docstring for the levers). The label inequality still sits
     INSIDE the blocked join condition, so same-label candidates die
     before any cosine fold — composing the two levers costs nothing:
-    blocked_cell_sides returns the base condition and the label/id
-    predicates AND on top."""
+    similarity.cell_join ANDs the label/id predicates onto the
+    blocked cell condition."""
     emb = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", "embedding", "label"
     )
-    # DEFAULT-path call (VERDICT r12 #4): the operator's default
-    # bundle IS the linear tier.
+    # default cell argument (linear_nlist)
     return similarity.hard_negative_mining(
         emb, k=S17_K, cache_key=f"ivflin-s20|{sf_dir}"
     )
@@ -5249,9 +5242,8 @@ def dd35_incremental_semdedup_linear(
             )
         )
     )
-    # DEFAULT-path call (VERDICT r12 #4): centroids=None makes the
-    # operator self-seed the linear tier from the state corpus and
-    # apply the scale bundle — this oracle checks the bare call.
+    # default cell argument (linear_nlist, self-seeded from the
+    # state corpus) — this oracle checks the bare call.
     return dedup.incremental_semantic_dedup(
         batch,
         emb,

@@ -5,11 +5,8 @@ The reference serializes every network write with a 3 s sleep
 (etl.js:6, 148–151) and exponential backoff on secondary rate limits
 (lib/gh.js:16, 32–44: 60 s → ×2 → cap 3660 s, reset on success). Here
 the connector runs inside ``foreachPartition`` so upstream transforms
-stay parallel; the sink stage controls its own parallelism:
-
-- ``coalesce(1)`` for strict reference-equivalent serialization (ST5);
-- N partitions with a per-partition token bucket for services that
-  allow N concurrent writers.
+stay parallel, and the sink stage itself runs as ``coalesce(1)``: one
+writer, strictly sequential, as the reference loads (ST5).
 
 Transport is injected (a callable), so tests run hermetically against
 a recorder and the GitHub HTTP client is just one implementation.
@@ -35,7 +32,6 @@ class SinkConfig:
     backoff_cap_s: float = 3660.0  # lib/gh.js:37
     backoff_factor: float = 2.0  # lib/gh.js:36
     max_retries: int = 10
-    serialize: bool = True  # ST5 strict sequential load
 
 
 class RateLimited(Exception):
@@ -81,7 +77,7 @@ def run_sink(
         # and the job would complete green — silently-sent-nothing
         # (r4 code review); "no retries" is max_retries=1.
         raise ValueError("max_retries must be >= 1 (1 = no retries)")
-    sink_df = df.coalesce(1) if cfg.serialize else df
+    sink_df = df.coalesce(1)  # ST5 strict sequential load
 
     def handle_partition(rows: Iterator[Row]) -> None:
         backoff = _Backoff(cfg)
