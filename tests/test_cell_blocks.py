@@ -4,7 +4,7 @@ re-partitions the pair enumeration (each unordered pair matches on
 exactly one ordered block combination), it never adds, drops, or
 rescores a candidate. Asserted bit-exact (cos doubles included), on
 cell_join itself for every join shape the operators build, plus the
-plumbing through semantic_dedup and the plan shape (explicit
+plumbing through semantic_dedup and mutual_knn_graph and the plan shape (explicit
 AQE-exempt exchange, no cartesian product).
 SCALE.md lesson 37.
 """
@@ -78,6 +78,19 @@ def test_semantic_dedup_pair_blocks_identical(spark):
         dedup.semantic_dedup(emb, threshold=0.8, pair_blocks=3).collect()
     )
     assert auto_blocked == auto_plain
+
+
+def test_mutual_knn_pair_blocks_identical(spark, monkeypatch):
+    """mutual_knn_graph's derived block count (LINEAR_PAIR_BLOCKS on
+    its linear_nlist default) is purely a physical re-plan: the same
+    edge rows unblocked and blocked."""
+    emb = _emb(spark)
+    monkeypatch.setattr(similarity, "LINEAR_PAIR_BLOCKS", 1)
+    plain = sorted(similarity.mutual_knn_graph(emb, k=3).collect())
+    assert plain
+    monkeypatch.setattr(similarity, "LINEAR_PAIR_BLOCKS", 2)
+    blocked = sorted(similarity.mutual_knn_graph(emb, k=3).collect())
+    assert blocked == plain
 
 
 def _label_cells(spark):

@@ -3,7 +3,8 @@ dd35 — constant-expected-cell-size nlist (similarity.linear_nlist),
 two-level assignment (ivf_assign_2level), and cell_join block
 salting, all derived from the one ``linear_nlist`` cell argument.
 (Block salting's pair-multiset identity is asserted on cell_join
-itself in tests/test_cell_blocks.py.)
+itself in tests/test_cell_blocks.py, and end to end on
+mutual_knn_graph here.)
 
 Claim family:
 - RECALL DOMINANCE: at fixture scale the linear policy's recall vs
@@ -85,6 +86,21 @@ def test_two_level_assignment_shape_and_occupancy(spark):
     assert all(0 <= r["cell"] < k for r in got)
     # output shape matches ivf_assign's contract (cell_pairs-ready)
     assert cells.columns == ["vec_id", "cell", "embedding", "_norm"]
+
+
+def _knn_lin(spark, monkeypatch, blocks):
+    monkeypatch.setattr(sim, "LINEAR_PAIR_BLOCKS", blocks)
+    return _rows(
+        sim.mutual_knn_graph(
+            _emb(spark, SF001), k=3, cache_key="tlv-knn|sf0.001"
+        )
+    )
+
+
+def test_mutual_knn_blocked_identity(spark, monkeypatch):
+    # end to end through the linear policy: the derived block salting
+    # leaves the mutual-kNN edge set bit-identical
+    assert _knn_lin(spark, monkeypatch, 1) == _knn_lin(spark, monkeypatch, 4)
 
 
 def _incr_lin(spark):
