@@ -42,6 +42,11 @@ r15 measurement changes (both declared in OPTIMIZATION_r15.md):
 - the IVF Python-side seed memos are cleared before EVERY timed run
   (VERDICT r14 #5), so ivf-family medians are cold-seed numbers from
   this round on (a one-time step change vs r14 and earlier).
+
+Every timed run is one ``registry.run(..., "noop")``: it starts cold
+(seed memos and CacheManager cleared), tags the run's jobs with
+``q:<name>`` and reports the jobs and the persistent RDDs the run
+left behind; the detail records both per query.
 """
 
 from __future__ import annotations
@@ -204,40 +209,10 @@ HEADLINE = [
 REF_COHORT = ["t1_token_stats", "dd3_minhash_lsh_pairs", "s1_cosine_topk"]
 
 
-def _clear_python_side_caches() -> None:
-    """VERDICT r14 #5: the IVF centroid/grouped-seed memos
-    (similarity._CENTROID_CACHE / _GROUPED_SEED_CACHE) are keyed on
-    sf_dir and survive across a query's n timed runs, so run 2..n of
-    every ivf-family query skipped the seed-collect jobs and their
-    medians were warm-cache numbers. Clearing BEFORE EVERY TIMED RUN
-    makes each run collect its seeds fresh — the honest cold number —
-    at the price of a one-time step change in the ivf-family medians
-    (recorded in SCALE.md lesson 55 / OPTIMIZATION_r15.md)."""
-    from trello_github_etl_spark.operators import similarity
-
-    similarity._CENTROID_CACHE.clear()
-    similarity._GROUPED_SEED_CACHE.clear()
-
-
-def _time_once(spark, name: str) -> float:
-    # Every timed run starts cold on both sides (VERDICT r15 #1): with
-    # the JVM cache cleared only between queries, runs 2..n of dd14,
-    # dd15 and samp7 read blocks that run 1 persisted. Clearing here
-    # also bounds executor storage across an ALL-mode sweep, since
-    # the SQL CacheManager never GC-reclaims persisted subtrees.
-    _clear_python_side_caches()
-    spark.catalog.clearCache()
-    t0 = time.time()
-    registry.QUERIES[name](spark, SF_DIR).write.format("noop").mode(
-        "overwrite"
-    ).save()
-    return time.time() - t0
-
-
 def _ref_cohort_sample(spark, samples: dict[str, list[float]]) -> None:
-    """One timed run of each cohort query (cache-cleared first by
-    _time_once, so a sibling query's persisted subtree can't subsidize
-    the reading).
+    """One timed run of each cohort query (started cold by
+    registry.run, so a sibling query's persisted subtree can't
+    subsidize the reading).
     Partial corpora (docs/embeddings-only sfN dirs) skip missing
     tables silently — ref_secs then sums whatever cohort survives,
     which is still internally consistent across rounds at the same
@@ -246,7 +221,8 @@ def _ref_cohort_sample(spark, samples: dict[str, list[float]]) -> None:
         if name not in registry.QUERIES:
             continue
         try:
-            samples.setdefault(name, []).append(_time_once(spark, name))
+            run = registry.run(spark, name, SF_DIR, "noop")
+            samples.setdefault(name, []).append(run.secs)
         except Exception:  # noqa: BLE001 — normalizer must never kill the bench
             pass
 
@@ -363,9 +339,9 @@ def main() -> None:
     # documents/embeddings) can't run the relational warmup — t1 reads
     # documents only and is similarly cheap.
     try:
-        registry.QUERIES["o4_top10_orders"](spark, SF_DIR).collect()
+        registry.run(spark, "o4_top10_orders", SF_DIR, "collect")
     except Exception:
-        registry.QUERIES["t1_token_stats"](spark, SF_DIR).collect()
+        registry.run(spark, "t1_token_stats", SF_DIR, "collect")
     # Warm the PYTHON worker pool too (VERDICT r3 #3): the first
     # Arrow/mapInPandas job in a session forks 32 python workers and
     # initializes Arrow — ~1.5-2.5 s that previously landed inside
@@ -397,6 +373,7 @@ def main() -> None:
     spread: dict[str, list[float]] = {}
     all_runs: dict[str, list[float]] = {}
     errors: dict[str, str] = {}
+    work: dict[str, dict[str, int]] = {"jobs": {}, "pins": {}}
     ref_samples: dict[str, list[float]] = {}
     _ref_cohort_sample(spark, ref_samples)  # START-of-sweep sample
     midpoint = len(headline) // 2
@@ -407,35 +384,39 @@ def main() -> None:
             continue
         # n runs, report the median: single shots are ±30% noisy
         # (JIT/worker-pool warmup, GC); the median is robust to one
-        # outlier in either direction. Build INSIDE the timer:
-        # iterative operators (e.g. connected components) do real
-        # work during plan construction.
+        # outlier in either direction. registry.run times the build
+        # with the action: iterative operators (e.g. connected
+        # components) do real work during plan construction.
         # One failing query must not lose the whole artifact (r9
         # advice): an ALL-mode sweep against a partial sfN dir (e.g.
         # make_sfN.py's docs/embeddings-only corpora) raises on every
         # relational query — record the failure and keep going.
         try:
-            runs = []
-            for _ in range(n_runs):
-                runs.append(_time_once(spark, name))
+            done = [registry.run(spark, name, SF_DIR, "noop") for _ in range(n_runs)]
             # Sub-second queries are noise-dominated at small n (VERDICT
             # r3 #3): once we know the query is fast, take extra samples
             # — the marginal cost is trivial and the median stabilizes.
-            if statistics.median(runs) < 1.0 and n_runs > 1:
-                for _ in range(n_runs + 1):
-                    runs.append(_time_once(spark, name))
+            if statistics.median(r.secs for r in done) < 1.0 and n_runs > 1:
+                done += [
+                    registry.run(spark, name, SF_DIR, "noop")
+                    for _ in range(n_runs + 1)
+                ]
         except Exception as exc:  # noqa: BLE001 — keep sweeping
             errors[name] = f"{type(exc).__name__}: {exc}"[:300]
             print(f"# {name}: FAILED {errors[name]}", file=sys.stderr)
             continue
+        runs = [r.secs for r in done]
         timings[name] = round(statistics.median(runs), 3)
+        work["jobs"][name] = len(done[-1].jobs)
+        work["pins"][name] = len(done[-1].pins)
         all_runs[name] = runs
         # [min, max, n]: n records the ACTUAL sample count (sub-second
         # queries take extra runs), not the configured n_runs
         spread[name] = [round(min(runs), 3), round(max(runs), 3), len(runs)]
         print(
             f"# {name}: median {timings[name]}s "
-            f"(min {spread[name][0]}, max {spread[name][1]}, n={len(runs)})",
+            f"(min {spread[name][0]}, max {spread[name][1]}, n={len(runs)}, "
+            f"jobs {work['jobs'][name]}, pins {work['pins'][name]})",
             file=sys.stderr,
         )
 
@@ -465,7 +446,10 @@ def main() -> None:
     if timings:
         for name in retime_suspects(timings, spread, ref_samples):
             try:
-                fresh = [_time_once(spark, name) for _ in range(n_runs)]
+                fresh = [
+                    registry.run(spark, name, SF_DIR, "noop").secs
+                    for _ in range(n_runs)
+                ]
             except Exception:  # noqa: BLE001 — retime must never kill the bench
                 continue
             pooled = all_runs[name] + fresh
@@ -499,6 +483,7 @@ def main() -> None:
         "calibration_secs": calibration,
         "ref_cohort": ref_medians,
         "ref_secs": ref_secs,
+        **work,
     }
     if pre_retime:
         # medians as the main sweep measured them, BEFORE the retime

@@ -3,12 +3,11 @@ from __future__ import annotations
 import sys
 from pathlib import Path
 
-import duckdb
 import pytest
 
 sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
-from trello_github_etl_spark.io import TABLES, table_path
+from tools.verify_local import oracle_db
 from trello_github_etl_spark.session import get_spark
 
 SF_DIR = "/root/testdata/sf0.001"
@@ -23,9 +22,4 @@ def spark():
 
 @pytest.fixture(scope="session")
 def duck():
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{table_path(SF_DIR, t)}')"
-        )
-    yield con
+    yield oracle_db(SF_DIR)

@@ -7,34 +7,14 @@ names, values — float bits included).
 
 from __future__ import annotations
 
-import math
-
 import pytest
 
 import __spark_entry__ as entrymod
 from tests.conftest import SF_DIR
+from tools.verify_local import normalize
 
 QS = entrymod.queries()
 ORACLES = entrymod.oracle_sql()
-
-
-def _normalize(rows, cols):
-    order = sorted(range(len(cols)), key=lambda i: cols[i])
-    out = []
-    for r in rows:
-        vals = []
-        for i in order:
-            v = r[i]
-            if isinstance(v, float) and math.isnan(v):
-                v = "NaN"
-            if hasattr(v, "isoformat"):
-                v = v.isoformat()
-            if isinstance(v, (list, tuple)):
-                v = tuple(v)
-            vals.append(v)
-        out.append(tuple(vals))
-    out.sort(key=repr)
-    return out
 
 
 @pytest.mark.parametrize("name", sorted(QS))
@@ -73,7 +53,7 @@ def test_query_matches_oracle(name, spark, duck):
     dcols = rel.columns
     assert sorted(scols) == sorted(dcols)
     assert len(srows) == len(drows)
-    assert _normalize(srows, scols) == _normalize(drows, dcols)
+    assert normalize(srows, scols) == normalize(drows, dcols)
 
 
 def test_entry_smoke(spark):

@@ -600,6 +600,46 @@ def test_stream_sketch_incremental_equals_batch_and_skips_replay(
     assert incremental == batch_once
 
 
+def test_stream_sketch_over_file_batches_equals_batch(spark, tmp_path):
+    """stream_sketch on a file source, one micro-batch per file: the
+    stored grid equals the one-shot grid over all three files."""
+    from trello_github_etl_spark.operators.sketch import countmin_table
+    from trello_github_etl_spark.plans.state_store import (
+        VersionedStateStore,
+    )
+    from trello_github_etl_spark.streaming.sketch_stream import (
+        read_grid,
+        stream_sketch,
+    )
+
+    src = str(tmp_path / "tokens_src")
+    for rows in (
+        [(f"tok{i % 30}",) for i in range(200)],
+        [(f"tok{i % 75}",) for i in range(150)],
+        [(f"day3-{i % 10}",) for i in range(90)],
+    ):
+        spark.createDataFrame(rows, "token string").coalesce(1).write.mode(
+            "append"
+        ).parquet(src)
+    store = VersionedStateStore(str(tmp_path / "cms"))
+    stream = (
+        spark.readStream.schema("token string")
+        .option("maxFilesPerTrigger", 1)
+        .parquet(src)
+    )
+    stream_sketch(stream, store, str(tmp_path / "ckpt")).trigger(
+        availableNow=True
+    ).start().awaitTermination(180)
+
+    assert store.last_batch() == 2  # three files, three batches
+    once = countmin_table(spark.read.parquet(src)).selectExpr(
+        "CAST(d AS LONG) d", "CAST(cell AS LONG) cell", "cnt"
+    )
+    assert sorted(map(tuple, read_grid(spark, store).collect())) == sorted(
+        map(tuple, once.collect())
+    )
+
+
 def test_sketch_stream_tolerates_foreign_commits(spark, tmp_path):
     """A store seeded by non-sketch commits must not trip the
     batch-id gate: a commit without a batch id leaves it at -1."""

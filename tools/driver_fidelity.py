@@ -12,11 +12,8 @@ Usage: python tools/driver_fidelity.py [--sf DIR] [names...]
 from __future__ import annotations
 
 import argparse
-import math
 import os
 import sys
-
-import duckdb
 
 # the checkout this file lives in, not a hardcoded path — running the
 # smoke from another clone must test THAT clone
@@ -24,7 +21,8 @@ sys.path.insert(
     0, os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 )
 
-from trello_github_etl_spark.io import TABLES, table_path  # noqa: E402
+from tools.verify_local import normalize, oracle_db  # noqa: E402
+from trello_github_etl_spark import registry  # noqa: E402
 
 DEFAULT_SAMPLE = [
     "pipe5_greedy_pack",  # applyInPandas / Arrow
@@ -50,24 +48,6 @@ DEFAULT_SAMPLE = [
 ]
 
 
-def norm(rows, cols):
-    order = sorted(range(len(cols)), key=lambda i: cols[i])
-    out = []
-    for r in rows:
-        vals = []
-        for i in order:
-            v = r[i]
-            if isinstance(v, float) and math.isnan(v):
-                v = "NaN"
-            if hasattr(v, "isoformat"):
-                v = v.isoformat()
-            if isinstance(v, (list, tuple)):
-                v = tuple(v)
-            vals.append(v)
-        out.append(tuple(vals))
-    return sorted(out, key=repr)
-
-
 def main() -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("--sf", default="/root/testdata/sf0.01")
@@ -80,25 +60,19 @@ def main() -> int:
 
     # deliberately bare: no shuffle-partition, TZ, or ANSI overrides
     spark = SparkSession.builder.master("local[8]").getOrCreate()
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM "
-            f"read_parquet('{table_path(args.sf, t)}')"
-        )
-
-    qs, oracles = entrymod.queries(), entrymod.oracle_sql()
+    con = oracle_db(args.sf)
+    oracles = entrymod.oracle_sql()
     names = args.names or DEFAULT_SAMPLE
     fails = 0
     for name in names:
-        sdf = qs[name](spark, args.sf)
-        srows = [tuple(r) for r in sdf.collect()]
+        run = registry.run(spark, name, args.sf, "collect")
+        srows = [tuple(r) for r in run.value]
         rel = con.sql(oracles[name])
         drows = rel.fetchall()
         ok = (
-            sorted(sdf.columns) == sorted(rel.columns)
+            sorted(run.columns) == sorted(rel.columns)
             and len(srows) == len(drows)
-            and norm(srows, sdf.columns) == norm(drows, rel.columns)
+            and normalize(srows, run.columns) == normalize(drows, rel.columns)
         )
         print(("PASS " if ok else "FAIL ") + name)
         fails += not ok

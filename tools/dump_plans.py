@@ -6,10 +6,8 @@ Usage: python tools/dump_plans.py
 
 from __future__ import annotations
 
-import io
 import os
 import sys
-from contextlib import redirect_stdout
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -28,15 +26,13 @@ def main() -> None:
     out = [
         "# PLANS — physical plans of the bench headline queries\n",
         "Generated by `python tools/dump_plans.py` (sf0.01, AQE initial "
-        "plans; ReusedExchange/coalescing appear at runtime). Long plans "
+        "plans in `explain('formatted')` form; ReusedExchange/coalescing "
+        "appear at runtime). Long plans "
         f"are truncated to {MAX_LINES} lines.\n",
     ]
     for name in HEADLINE:
-        df = registry.QUERIES[name](spark, SF_DIR)
-        buf = io.StringIO()
-        with redirect_stdout(buf):
-            df.explain()
-        lines = buf.getvalue().strip().splitlines()
+        plan = registry.run(spark, name, SF_DIR, "explain").value
+        lines = plan.strip().splitlines()
         shown = lines[:MAX_LINES]
         if len(lines) > MAX_LINES:
             shown.append(f"... ({len(lines) - MAX_LINES} more lines)")

@@ -26,14 +26,14 @@ import os
 import sys
 import time
 
-import duckdb
 import numpy as np
 
 sys.path.insert(
     0, os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 )
 
-from trello_github_etl_spark.io import TABLES, table_path  # noqa: E402
+from tools.verify_local import oracle_db  # noqa: E402
+from trello_github_etl_spark import registry  # noqa: E402
 from trello_github_etl_spark.session import get_spark  # noqa: E402
 
 
@@ -94,17 +94,12 @@ def main() -> int:
 
     import __spark_entry__ as entrymod
 
-    qs, oracles = entrymod.queries(), entrymod.oracle_sql()
+    oracles = entrymod.oracle_sql()
     names = args.names or sorted(oracles)
 
     spark = get_spark("pandas-fetch-gate")
     spark.sparkContext.setLogLevel("ERROR")
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM "
-            f"read_parquet('{table_path(args.sf, t)}')"
-        )
+    con = oracle_db(args.sf)
 
     results: dict[str, dict] = {}
     n_fail = 0
@@ -114,7 +109,7 @@ def main() -> int:
         t0 = time.time()
         rec: dict = {"match": False, "err": None}
         try:
-            spdf = qs[name](spark, args.sf).toPandas()
+            spdf = registry.run(spark, name, args.sf, "pandas").value
             dpdf = con.sql(oracles[name]).df()
             a, b = canon(spdf), canon(dpdf)
             rec["rows"] = len(a)
@@ -141,8 +136,6 @@ def main() -> int:
                 )
         except Exception as exc:  # noqa: BLE001 — sweep must finish
             rec["err"] = f"{type(exc).__name__}: {exc}"[:300]
-        finally:
-            spark.catalog.clearCache()
         rec["secs"] = round(time.time() - t0, 2)
         results[name] = rec
         status = "PASS" if rec["match"] else "FAIL"

@@ -25,12 +25,10 @@ Usage: python tools/plan_audit.py [--sf /root/testdata/sf0.01]
 from __future__ import annotations
 
 import argparse
-import io
 import json
 import os
 import re
 import sys
-from contextlib import redirect_stdout
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -62,11 +60,7 @@ def main() -> None:
     rows = {}
     for name in sorted(registry.QUERIES):
         try:
-            df = registry.QUERIES[name](spark, args.sf)
-            buf = io.StringIO()
-            with redirect_stdout(buf):
-                df.explain("formatted")
-            plan = buf.getvalue()
+            plan = registry.run(spark, name, args.sf, "explain").value
         except Exception as exc:  # noqa: BLE001
             rows[name] = {"error": str(exc)[:200]}
             continue

@@ -44,7 +44,7 @@ QUERIES = ["dd3_minhash_lsh_pairs", "dd5_jaccard_pairs",
            "dd27_lsh_pairs_capped"]
 
 CHILD = r"""
-import json, sys, time, urllib.request
+import json, sys, urllib.request
 sys.path.insert(0, sys.argv[3])  # repo root from the parent — never a hardcoded checkout
 from trello_github_etl_spark.session import get_spark
 from trello_github_etl_spark import registry
@@ -61,12 +61,9 @@ spark.sparkContext.setLogLevel("ERROR")
 # spark.port.maxRetries, and scraping the hardcoded port would read a
 # DIFFERENT app's UI after this query already paid its full runtime
 ui_base = spark.sparkContext.uiWebUrl
-t0 = time.time()
-df = registry.QUERIES[name](spark, sf_dir)
 # same materialization discipline as bench.py: noop write runs the
 # full plan with every output column realized
-df.write.format("noop").mode("overwrite").save()
-secs = round(time.time() - t0, 1)
+run = registry.run(spark, name, sf_dir, "noop")
 
 app_id = spark.sparkContext.applicationId
 base = f"{ui_base}/api/v1/applications/{app_id}"
@@ -76,7 +73,9 @@ disk_spill = sum(s.get("diskBytesSpilled", 0) for s in stages)
 shuffle_write = sum(s.get("shuffleWriteBytes", 0) for s in stages)
 peak_mem = max((s.get("peakExecutionMemory", 0) for s in stages), default=0)
 print("CHILD_RESULT " + json.dumps({
-    "secs": secs,
+    "secs": round(run.secs, 1),
+    "jobs": len(run.jobs),
+    "pins": len(run.pins),
     "memory_bytes_spilled": mem_spill,
     "disk_bytes_spilled": disk_spill,
     "shuffle_write_bytes": shuffle_write,

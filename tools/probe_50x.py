@@ -21,23 +21,20 @@ import json
 import os
 import statistics
 import sys
-import time
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, ROOT)
+
+from bench import _calibration_secs  # noqa: E402
+from trello_github_etl_spark import registry  # noqa: E402
+from trello_github_etl_spark.session import get_spark  # noqa: E402
 
 SF01 = "/root/testdata/sf0.1"
 SF5 = os.path.join(ROOT, ".data", "sf5")
 
 
-def _median_secs(spark, fn, sf_dir: str, runs: int = 3) -> float:
-    times = []
-    for _ in range(runs):
-        spark.catalog.clearCache()
-        t0 = time.time()
-        df = fn(spark, sf_dir)
-        df.write.format("noop").mode("overwrite").save()
-        times.append(time.time() - t0)
+def _median_secs(spark, name: str, sf_dir: str, runs: int = 3) -> float:
+    times = [registry.run(spark, name, sf_dir, "noop").secs for _ in range(runs)]
     return round(statistics.median(times), 3)
 
 
@@ -47,29 +44,13 @@ def main() -> int:
     ap.add_argument("names", nargs="+")
     args = ap.parse_args()
 
-    from trello_github_etl_spark import registry
-    from trello_github_etl_spark.session import get_spark
-
     registry.load_all()
     spark = get_spark("probe-50x")
     spark.sparkContext.setLogLevel("ERROR")
-
-    cals = []
-    for _ in range(3):
-        t0 = time.time()
-        spark.range(0, 50_000_000, 1, 32).selectExpr(
-            "sum(cast(xxhash64(id) as decimal(38,0))) AS h"
-        ).write.format("noop").mode("overwrite").save()
-        cals.append(time.time() - t0)
-
-    out: dict = {
-        "calibration_secs": round(statistics.median(cals), 3),
-        "sf": SF5,
-    }
+    out: dict = {"calibration_secs": _calibration_secs(spark), "sf": SF5}
     for name in args.names:
-        fn = registry.QUERIES[name]
-        m01 = _median_secs(spark, fn, SF01)
-        m5 = _median_secs(spark, fn, SF5)
+        m01 = _median_secs(spark, name, SF01)
+        m5 = _median_secs(spark, name, SF5)
         out[name] = {
             "sf0.1": m01,
             "sf5": m5,

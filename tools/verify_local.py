@@ -22,6 +22,7 @@ import duckdb
 
 sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
+from trello_github_etl_spark import registry  # noqa: E402
 from trello_github_etl_spark.io import TABLES, table_path  # noqa: E402
 from trello_github_etl_spark.session import get_spark  # noqa: E402
 
@@ -47,6 +48,24 @@ def normalize(rows, cols):
     return out
 
 
+def oracle_db(sf_dir: str) -> duckdb.DuckDBPyConnection:
+    """A DuckDB connection with one view per registry table under
+    ``sf_dir``, the relations every oracle SQL reads."""
+    con = duckdb.connect()
+    for t in TABLES:
+        try:
+            con.execute(
+                f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{table_path(sf_dir, t)}')"
+            )
+        except duckdb.Error:
+            # partial fixture dirs are legitimate (.data/sf5 carries
+            # only documents/embeddings by design — tools/make_sfN.py);
+            # a query over a missing table then fails LOUDLY in its
+            # own row instead of killing the whole sweep here
+            print(f"note: table {t!r} absent at {sf_dir}; view skipped")
+    return con
+
+
 def main() -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("--sf", default="/root/testdata/sf0.01")
@@ -55,23 +74,11 @@ def main() -> int:
 
     import __spark_entry__ as entrymod
 
-    qs = entrymod.queries()
     oracles = entrymod.oracle_sql()
-    names = args.names or sorted(qs)
+    names = args.names or sorted(registry.QUERIES)
 
     spark = get_spark("verify_local")
-    con = duckdb.connect()
-    for t in TABLES:
-        try:
-            con.execute(
-                f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{table_path(args.sf, t)}')"
-            )
-        except duckdb.Error:
-            # partial fixture dirs are legitimate (.data/sf5 carries
-            # only documents/embeddings by design — tools/make_sfN.py);
-            # a query over a missing table then fails LOUDLY in its
-            # own row instead of killing the whole sweep here
-            print(f"note: table {t!r} absent at {args.sf}; view skipped")
+    con = oracle_db(args.sf)
 
     # Each query additionally emits one machine-readable line
     # ("RESULT {json}") that tools/sweep_to_json.py copies VERBATIM
@@ -95,25 +102,23 @@ def main() -> int:
             print(f"RESULT {json.dumps({name: rec})}")
 
         try:
-            sdf = qs[name](spark, args.sf)
-            srows = sdf.collect()
-            scols = sdf.columns
+            run = registry.run(spark, name, args.sf, "collect")
         except Exception as e:  # noqa: BLE001
             rec["err"] = f"spark error: {e}"
             emit(f"FAIL {name}: spark error: {e}")
             n_fail += 1
-            spark.catalog.clearCache()  # drop any pin made pre-failure
             continue
+        srows, scols = run.value, run.columns
         # Spark-side wall time alone (build + collect), BEFORE the
         # DuckDB oracle runs: `secs` includes the oracle + multiset
         # compare, which grows with sf and pollutes scale ratios
         # (tools/ratio_gate.py prefers this field — at sf1, s1's
-        # brute-force SQL oracle is 30x its Spark time).
-        rec["spark_secs"] = round(time.time() - t0, 2)
-        # persist()-pinned subtrees register in the SQL CacheManager
-        # for the session lifetime (r9 advice) — release per query so
-        # a 200-query sweep doesn't accrete executor storage
-        spark.catalog.clearCache()
+        # brute-force SQL oracle is 30x its Spark time). `jobs` counts
+        # the jobs tagged with the query; `pins` the persistent RDDs it
+        # left registered (registry.run says why clearCache() alone
+        # does not release them).
+        rec["spark_secs"] = round(run.secs, 2)
+        rec.update(jobs=len(run.jobs), pins=len(run.pins))
         rec["spark_rows"] = len(srows)
         if name not in oracles:
             rec.update(rows_match=True, schema_match=None, hash_match=None)

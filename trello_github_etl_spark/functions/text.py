@@ -124,11 +124,6 @@ def render_check_line(state: Column, number: Column) -> Column:
     return F.concat(box, number.cast("string"))
 
 
-def section_header(name: Column, task_list: Column) -> Column:
-    """F7 (transform.js:169): ``## {name}\n\n{tasks}``."""
-    return F.concat(F.lit("## "), name, F.lit("\n\n"), task_list)
-
-
 def strip_at(username: Column) -> Column:
     """F9 (transform.js:194,344): drop a single leading ``@``."""
     return F.regexp_replace(username, r"^@", "")
@@ -149,11 +144,6 @@ def task_type(checklist_name: Column) -> Column:
 def parse_env_dsl(pairs: Column) -> Column:
     """F11 (transform.js:89–94): ``"A:B, C:D"`` → map<string,string>."""
     return F.str_to_map(pairs, F.lit(r"[,\s]+"), F.lit(":"))
-
-
-def with_sentinel(col: Column, sentinel: str) -> Column:
-    """F15 (transform.js:275–281, 297): coalesce to ``!Owner``-style default."""
-    return F.coalesce(col, F.lit(sentinel))
 
 
 def kv_key(namespace: str, entity_id: Column) -> Column:

@@ -36,10 +36,6 @@ REQUIRED_STOPWORDS = ("the", "be", "to", "of", "and", "that", "have", "with")
 _ELLIPSIS_RE = r"\.\.\."
 
 
-def n_words_of(toks: Column) -> Column:
-    return F.size(toks)
-
-
 def rule_word_count(toks: Column) -> Column:
     n = F.size(toks)
     return (n >= MIN_WORDS) & (n <= MAX_WORDS)

@@ -34,19 +34,10 @@ def disc_price() -> Column:
     return F.col("l_extendedprice").cast(DEC) * (one - F.col("l_discount").cast(DEC))
 
 
-def charged_price() -> Column:
-    """disc_price * (1 + l_tax) in exact decimal."""
-    one = F.lit(1).cast(DEC)
-    return disc_price() * (one + F.col("l_tax").cast(DEC))
-
-
 # DuckDB-side equivalents (keep in sync with the Python builders above).
 SQL_DSUM = "CAST(SUM(CAST({col} AS DECIMAL(18,2))) AS DOUBLE)"
 SQL_DAVG = "CAST(SUM(CAST({col} AS DECIMAL(18,2))) AS DOUBLE) / COUNT({col})"
 SQL_DISC_PRICE = (
     "CAST(l_extendedprice AS DECIMAL(18,2))"
     " * (CAST(1 AS DECIMAL(18,2)) - CAST(l_discount AS DECIMAL(18,2)))"
-)
-SQL_CHARGED_PRICE = (
-    SQL_DISC_PRICE + " * (CAST(1 AS DECIMAL(18,2)) + CAST(l_tax AS DECIMAL(18,2)))"
 )

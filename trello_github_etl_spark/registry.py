@@ -26,9 +26,13 @@ values order-insensitively but exactly):
 from __future__ import annotations
 
 import json
+import time
 from collections.abc import Callable
+from contextlib import redirect_stdout
+from dataclasses import dataclass
+from io import StringIO
 from pathlib import Path
-from typing import Optional
+from typing import Any, Optional
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -187,3 +191,73 @@ def load_all() -> None:
     )
 
     _prioritize()
+
+
+def _explain(df: DataFrame) -> str:
+    buf = StringIO()
+    with redirect_stdout(buf):
+        df.explain("formatted")
+    return buf.getvalue()
+
+
+_ACTIONS: dict[str, Callable[[DataFrame], Any]] = {
+    "noop": lambda df: df.write.format("noop").mode("overwrite").save(),
+    "collect": lambda df: df.collect(),
+    "pandas": lambda df: df.toPandas(),
+    "explain": _explain,
+}
+
+
+@dataclass(frozen=True)
+class Run:
+    value: Any  # None (noop), list[Row], pandas.DataFrame or plan text
+    columns: list[str]
+    secs: float  # build + action
+    jobs: list[int]  # the jobs tagged q:<name> during this call
+    pins: list[int]  # persistent RDD ids this call left registered
+
+
+def _persistent_rdds(spark: SparkSession) -> set[int]:
+    return set(spark.sparkContext._jsc.getPersistentRDDs())
+
+
+def run(spark: SparkSession, name: str, sf_dir: str, action: str) -> Run:
+    """Build query ``name`` over ``sf_dir`` and run one ``action`` on
+    it: ``noop`` (a noop-format write), ``collect``, ``pandas``
+    (``toPandas``) or ``explain`` (the ``explain("formatted")`` text).
+    Every registry sweep in ``bench.py`` and ``tools/`` goes through
+    here.
+
+    Each call starts cold: the IVF seed memos and the SQL CacheManager
+    are cleared first, so a sibling query's seeds or cached subtree
+    cannot subsidize this one. ``clearCache()`` does not release
+    ``localCheckpoint`` pins: at sf0.001 one sweep left 4 persistent RDDs
+    after dd6, 7 after dd16 and 1 after pipe6, with the CacheManager
+    empty after each. ``Run.pins`` reports them; releasing them is the
+    builders' job.
+
+    Every job the call starts carries the job tag ``q:<name>``
+    (``SparkContext.addJobTag``; ``getJobIdsForTag`` does not find a
+    ``SparkSession.addTag`` tag under its own name). The tag is removed even when the
+    builder or the action raises, and the exception propagates."""
+    from trello_github_etl_spark.operators import similarity
+
+    act = _ACTIONS[action]
+    similarity._CENTROID_CACHE.clear()
+    similarity._GROUPED_SEED_CACHE.clear()
+    spark.catalog.clearCache()
+    sc, tag = spark.sparkContext, f"q:{name}"
+    tracker = sc._jsc.sc().statusTracker()
+    seen, held = set(tracker.getJobIdsForTag(tag)), _persistent_rdds(spark)
+    sc.addJobTag(tag)
+    try:
+        t0 = time.perf_counter()
+        df = QUERIES[name](spark, sf_dir)
+        value = act(df)
+        secs = time.perf_counter() - t0
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+    finally:
+        sc.removeJobTag(tag)
+    jobs = sorted(set(tracker.getJobIdsForTag(tag)) - seen)
+    pins = sorted(_persistent_rdds(spark) - held)
+    return Run(value, df.columns, secs, jobs, pins)
