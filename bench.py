@@ -331,7 +331,7 @@ def _calibration_secs(spark) -> float:
 
 def main() -> None:
     registry.load_all()
-    spark = get_spark("bench")
+    spark = get_spark("bench", extra_conf={"spark.ui.showConsoleProgress": "false"})
     spark.sparkContext.setLogLevel("ERROR")
 
     # Warm the JVM + parquet footers once with the cheapest query.

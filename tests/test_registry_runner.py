@@ -62,3 +62,13 @@ def test_pins_are_the_persistent_rdds_the_call_left(spark):
     before = held()
     run = registry.run(spark, "pipe6_corpus_shuffle", SF_DIR, "noop")
     assert run.pins == sorted(held() - before)
+
+
+def test_corpus_shuffle_leaves_no_pin_and_plans_no_rdd_scan(spark):
+    """pipe6 recomputes its md5 keys instead of pinning them: the runner
+    finds nothing left registered, and the plan reads the table, not a
+    checkpointed RDD."""
+    assert registry.run(spark, "pipe6_corpus_shuffle", SF_DIR, "noop").pins == []
+    plan = registry.run(spark, "pipe6_corpus_shuffle", SF_DIR, "explain").value
+    assert "ExistingRDD" not in plan
+    assert "Scan parquet" in plan

@@ -92,8 +92,8 @@ SHUFFLE_BUCKETS = 256  # first hex byte of the key; order-preserving
 def _salted_bucket_rank(docs, id_col, salt, stage_col=None):
     """Shared core of deterministic_shuffle / curriculum_order: salted
     md5 key, first-hex-byte range buckets (optionally nested under a
-    stage level), one materialization, driver prefix-sum offsets laid
-    out in (stage DESC,) bucket ASC order, per-cell window rank.
+    stage level), driver prefix-sum offsets laid out in (stage DESC,)
+    bucket ASC order, per-cell window rank.
     Returns (keyed_frame, global_position_column)."""
     iid = F.col(id_col)
     key = F.md5(F.concat(F.lit(salt + "|"), iid.cast("string")))
@@ -104,19 +104,19 @@ def _salted_bucket_rank(docs, id_col, salt, stage_col=None):
         key.alias("_key"),
         F.conv(F.substring(key, 1, 2), 16, 10).cast("int").alias("bucket"),
     ]
-    keyed = docs.select(*cols).localCheckpoint(eager=True)
-    # ^ materialized once: the counts collect below AND the ranking
-    # pass both probe this frame — without the checkpoint each would
-    # re-scan the corpus and recompute every md5 key (2x the work at
-    # any scale; on a cluster, persist() instead). Storage lifetime
-    # (r4 advice): the checkpointed blocks live in executor storage
-    # until the returned frame is garbage-collected and the
-    # ContextCleaner runs — there is no explicit unpersist because the
-    # caller's result plan still references this frame lazily.
-    # Per-epoch reshuffle loops (new salt each epoch) therefore
-    # accumulate one checkpointed copy of (id, key, bucket) per
-    # LIVE epoch frame; drop references to prior epochs' results (or
-    # del them) so GC can reclaim the blocks between epochs.
+    keyed = docs.select(*cols)
+    # Both the counts collect below and the ranking pass read `keyed`.
+    # Without a stage, the counts pass prunes to the id column
+    # (ReadSchema: struct<doc_id:bigint>), and hashing every id again
+    # costs less than pinning (id, key, bucket) for every document:
+    # on a 4-core box pipe6 took 0.80 s of CPU per op with an eager
+    # localCheckpoint and 0.56 s without one at sf0.1, 1.29 -> 1.04 s
+    # at 50k docs.
+    # A stage is the caller's text score (pipe9), which is dearer to
+    # compute twice than to pin once: pipe9 at 50k docs went 5.23 ->
+    # 8.46 s without its checkpoint, so that one materialization stays.
+    if stage_col is not None:
+        keyed = keyed.localCheckpoint(eager=True)
     group = (["stage"] if stage_col is not None else []) + ["bucket"]
     counts = {
         tuple(r[c] for c in group): r["n"]
@@ -133,25 +133,27 @@ def _salted_bucket_rank(docs, id_col, salt, stage_col=None):
         if stage_col is not None
         else [None]
     )
-    offsets, acc = {}, 0
+    keys, offsets, acc = [], [], 0
     for s in stages:
         for b in range(SHUFFLE_BUCKETS):
-            kk = (s, b) if stage_col is not None else (b,)
-            mapkey = s * SHUFFLE_BUCKETS + b if stage_col is not None else b
-            offsets[mapkey] = acc
-            acc += counts.get(kk, 0)
-    if offsets:
+            keys.append(s * SHUFFLE_BUCKETS + b if stage_col is not None else b)
+            offsets.append(acc)
+            acc += counts.get((s, b) if stage_col is not None else (b,), 0)
+    if keys:
         lookup = (
             F.col("stage") * SHUFFLE_BUCKETS + F.col("bucket")
             if stage_col is not None
             else F.col("bucket")
         )
-        offset_col = F.element_at(
-            F.create_map(
-                *[F.lit(x) for k, v in offsets.items() for x in (k, v)]
-            ),
-            lookup,
+        # one parsed map literal: a create_map of F.lit pairs is one
+        # py4j round-trip per key and per value (512 for pipe6, up to
+        # 5,120 for pipe9), the lesson similarity.lsh_bucket records
+        offset_map = F.expr(
+            "map_from_arrays(array({}), array({}))".format(
+                ", ".join(map(str, keys)), ", ".join(f"{v}L" for v in offsets)
+            )
         )
+        offset_col = F.element_at(offset_map, lookup)
     else:  # empty input (no observed stages): position map degenerates
         offset_col = F.lit(0)
     w = Window.partitionBy(*group).orderBy("_key", "doc_id")

@@ -9,7 +9,8 @@ Layout:
     root/
       v00000001/...parquet files...
       v00000002/...
-      _manifest.json        <- single source of truth
+      _manifest.json        <- single source of truth, with the
+                               schema of every published version
 
 Commit protocol: write the new version DIRECTORY first (never touched
 again afterwards), then publish it by atomically replacing
@@ -96,7 +97,7 @@ class VersionedStateStore:
             with open(self._manifest_path()) as f:
                 return json.load(f)
         except FileNotFoundError:
-            return {"current": 0, "history": []}
+            return {"current": 0, "history": [], "schemas": {}}
 
     def _publish(self, manifest: dict) -> None:
         tmp = self._manifest_path() + ".tmp"
@@ -206,6 +207,9 @@ class VersionedStateStore:
         m2["history"].append(
             {"version": version, "op": op, "n_rows": n, "ts": time.time()}
         )
+        # the schema read() declares, so no read infers it with a job
+        # (a file read makes every declared field nullable, as inference does)
+        m2["schemas"][str(version)] = df.schema.jsonValue()
         if batch_id is not None:
             m2["last_batch"] = batch_id
         self._publish(m2)
@@ -265,7 +269,8 @@ class VersionedStateStore:
         version: int | None = None,
         empty: StructType | str | None = None,
     ) -> DataFrame:
-        """Latest snapshot, or time-travel to any committed version.
+        """Latest snapshot, or time-travel to any committed version,
+        read with the schema its commit recorded (no inference job).
         Before the first commit (version 0) this is an empty frame of
         schema ``empty``, or an error when none is given."""
         m = self._read_manifest()
@@ -277,7 +282,8 @@ class VersionedStateStore:
         committed = {h["version"] for h in m["history"]}
         if v not in committed:
             raise ValueError(f"version {v} was never committed")
-        return spark.read.parquet(self._dir(v))
+        schema = StructType.fromJson(m["schemas"][str(v)])
+        return spark.read.schema(schema).parquet(self._dir(v))
 
     def merge(self, applied: DataFrame, key: str = "entity_id") -> int:
         """MERGE: applied rows replace matching keys, everything else
@@ -331,5 +337,8 @@ class VersionedStateStore:
                 f"{m['current']} -> {latest['current']}; re-run vacuum"
             )
         m["history"] = [h for h in m["history"] if h["version"] in keep]
+        m["schemas"] = {
+            k: v for k, v in m["schemas"].items() if int(k) in keep
+        }
         self._publish(m)
         return removed

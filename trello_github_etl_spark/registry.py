@@ -232,9 +232,8 @@ def run(spark: SparkSession, name: str, sf_dir: str, action: str) -> Run:
     are cleared first, so a sibling query's seeds or cached subtree
     cannot subsidize this one. ``clearCache()`` does not release
     ``localCheckpoint`` pins: at sf0.001 one sweep left 4 persistent RDDs
-    after dd6, 7 after dd16 and 1 after pipe6, with the CacheManager
-    empty after each. ``Run.pins`` reports them; releasing them is the
-    builders' job.
+    after dd6 and 7 after dd16, with the CacheManager empty after each.
+    ``Run.pins`` reports them; releasing them is the builders' job.
 
     Every job the call starts carries the job tag ``q:<name>``
     (``SparkContext.addJobTag``; ``getJobIdsForTag`` does not find a

@@ -46,8 +46,10 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         # Prune nested struct fields down to the parquet reader.
         .config("spark.sql.optimizer.nestedSchemaPruning.enabled", "true")
-        # events.parquet carries TIMESTAMP(NANOS); read as long and
-        # convert in io.load_table (data is µs-precision, lossless).
+        # Older events.parquet files carry TIMESTAMP(NANOS), which the
+        # vectorized reader rejects unless it reads them as long;
+        # io.load_table sets this itself when the footer says so and
+        # converts to µs (data is µs-precision, lossless).
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         # Local-mode shuffle sizing; AQE coalesces below this cap.
         .config(
